@@ -61,10 +61,9 @@ clustering over the synthetic pages table) is exercised by the pytest suite
 (tests/test_pipeline_e2e.py); ``entry`` runs its document-dedup flagship.
 Components with no SQL-oracle shape are pytest-verified instead:
 Structured Streaming plans (soweego_spark/streaming/events.py,
-tests/test_streaming.py), multimodal binary-column operators
-(operators/multimodal.py, tests/test_multimodal.py), validator/enricher set
-algebra (operators/validator.py, tests/test_validator.py), checkpoint
-resume (plans/checkpoint.py, tests/test_checkpoint_resume.py), sources
+tests/test_streaming.py), validator/enricher set algebra
+(operators/validator.py, tests/test_validator.py), checkpoint resume
+(plans/checkpoint.py, tests/test_checkpoint_resume.py), sources
 (sources/readers.py, tests/test_sources.py).
 """
 
@@ -4346,13 +4345,7 @@ def q_imdb_person_flavor(spark: SparkSession, sf_dir: str) -> DataFrame:
         imdb_person_tables,
     )
 
-    # cache_base: the five tables below union into ONE plan, so the
-    # parsed base persists once instead of re-running the scan + parse
-    # per branch (r7; same session-scoped persist pattern as
-    # _pair_feature_frame)
-    tables = imdb_person_tables(
-        _imdb_people_fixture(spark, sf_dir), cache_base=True
-    )
+    tables = imdb_person_tables(_imdb_people_fixture(spark, sf_dir))
     out = None
     for name in sorted(IMDB_PERSON_TABLES):
         tagged = tables[name].withColumn("person_table", F.lit(name))

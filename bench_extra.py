@@ -1,24 +1,36 @@
 #!/usr/bin/env python
-"""Round-7 measurement harness (bench.py is FROZEN — this file holds the
-extra instrumentation the optimization round needs).
+"""Per-query measurement harness for the gate queries (bench.py is FROZEN —
+this file holds the extra instrumentation optimization work needs; the
+end-to-end flagship/curate benchmark is perfbench/run.py).
 
 Modes:
 
   python bench_extra.py warm  q1 q2 ...   # one JVM, N warm runs per query
   python bench_extra.py fresh q1 q2 ...   # fresh JVM per (query, run),
                                           # variants interleaved round-robin
+  python bench_extra.py fresh --root OLD --root NEW q1 ...
+                                          # the same, A/B across checkouts
   python bench_extra.py plan  q1 q2 ...   # print explain("formatted")
 
 The warm protocol matches bench.py exactly (clearCache before every
 measured run, noop sink) so warm numbers here predict the driver's
-numbers. The fresh protocol is the CLAUDE.md house rule for A/Bs on this
+numbers. The fresh protocol is the CLAUDE.md house rule for A/Bs on a
 shared host: fresh-JVM subprocesses, interleaved, compare medians.
 
+``fresh`` runs each query from every ``--root`` checkout (default: this
+one). Each child runs with the root as its working directory and
+``PYTHONPATH``, so the driver and its Python workers import that root's
+``soweego_spark``. With several roots the runs are tagged A, B, ... in
+``--root`` order, and the order flips every round: the first child of a
+round warms the OS page cache for the next, a systematic bias if one
+side always ran first. Per-root medians are printed at the end.
+
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1), SPARK_GRAFT_CPUS
-(default 32), BENCH_EXTRA_RUNS (default 3).
+(default: the CPUs this process may run on), BENCH_EXTRA_RUNS (default 3).
 """
 from __future__ import annotations
 
+import argparse
 import json
 import os
 import statistics
@@ -29,7 +41,9 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = int(
+    os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0)))
+)
 RUNS = int(os.environ.get("BENCH_EXTRA_RUNS", "3"))
 
 
@@ -66,7 +80,7 @@ def warm(names: list[str]) -> None:
 
 _FRESH_CHILD = r"""
 import json, os, sys, time
-sys.path.insert(0, {repo!r})
+sys.path.insert(0, {root!r})
 os.environ.setdefault("SPARK_GRAFT_SF_DIR", {sf!r})
 import __spark_entry__ as entry
 from soweego_spark.session import get_spark
@@ -84,34 +98,44 @@ spark.stop()
 """
 
 
-def fresh(names: list[str]) -> None:
-    repo = os.path.dirname(os.path.abspath(__file__))
-    walls: dict[str, list[float]] = {n: [] for n in names}
+def _fresh_run(root: str, name: str) -> float | None:
+    code = _FRESH_CHILD.format(
+        root=root, sf=SF_DIR, cpus=CPUS, parts=2 * CPUS, name=name
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", code],
+        capture_output=True, text=True, cwd=root, timeout=1800,
+        env=dict(os.environ, PYTHONPATH=root),
+    )
+    for line in out.stdout.splitlines():
+        if line.startswith("RESULT "):
+            return json.loads(line[len("RESULT "):])["secs"]
+    print(out.stderr[-2000:])
+    return None
+
+
+def fresh(names: list[str], roots: list[str]) -> None:
+    roots = [os.path.abspath(r) for r in roots]
+    if len(roots) > 1:
+        tagged = [(chr(ord("A") + i), r) for i, r in enumerate(roots)]
+        for tag, root in tagged:
+            print(f"{tag} = {root}", flush=True)
+    else:
+        tagged = [("", roots[0])]
+    walls: dict[str, list[float]] = {}
     for r in range(RUNS):
+        order = tagged if r % 2 == 0 else tagged[::-1]
         for name in names:  # interleave variants each round
-            code = _FRESH_CHILD.format(
-                repo=repo, sf=SF_DIR, cpus=CPUS, parts=2 * CPUS, name=name
-            )
-            out = subprocess.run(
-                [sys.executable, "-c", code],
-                capture_output=True, text=True, cwd=repo, timeout=1800,
-            )
-            got = None
-            for line in out.stdout.splitlines():
-                if line.startswith("RESULT "):
-                    got = json.loads(line[len("RESULT "):])["secs"]
-            if got is None:
-                print(f"{name} run {r}: FAILED\n{out.stderr[-2000:]}")
-                continue
-            walls[name].append(got)
-            print(f"{name} run {r}: {got}", flush=True)
-    for name in names:
-        w = walls[name]
-        if w:
-            print(
-                f"{name}: median={statistics.median(w):.2f} runs={w}",
-                flush=True,
-            )
+            for tag, root in order:
+                key = f"{name}[{tag}]" if tag else name
+                got = _fresh_run(root, name)
+                if got is not None:
+                    walls.setdefault(key, []).append(got)
+                print(f"{key} run {r}: {'FAILED' if got is None else got}",
+                      flush=True)
+    for key, w in walls.items():
+        print(f"{key}: median={statistics.median(w):.2f} runs={w}",
+              flush=True)
     print("JSON " + json.dumps(walls))
 
 
@@ -126,5 +150,18 @@ def plan(names: list[str]) -> None:
 
 
 if __name__ == "__main__":
-    mode, names = sys.argv[1], sys.argv[2:]
-    {"warm": warm, "fresh": fresh, "plan": plan}[mode](names)
+    ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    ap.add_argument("mode", choices=("warm", "fresh", "plan"))
+    ap.add_argument("names", nargs="+", help="queries() entry names")
+    ap.add_argument(
+        "--root", action="append", default=None,
+        help="checkout to run `fresh` from (repeat for an A/B)",
+    )
+    args = ap.parse_args()
+    if args.root and args.mode != "fresh":
+        ap.error("--root applies to the fresh mode only")
+    if args.mode == "fresh":
+        fresh(args.names, args.root or [os.path.dirname(
+            os.path.abspath(__file__))])
+    else:
+        {"warm": warm, "plan": plan}[args.mode](args.names)

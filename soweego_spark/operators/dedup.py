@@ -934,9 +934,10 @@ def _greedy_component_drops(
     # applyInPandas task over the whole edge set decides identically —
     # in the same memory envelope the per-component path already accepts
     # for a single cap-sized component — and the CC loop + size routing
-    # (~15-20 driver-scheduled jobs at sandbox scale) vanishes. The
-    # caller hands the edges in as an eager localCheckpoint, so the
-    # count probe is one cheap job.
+    # (~15-20 driver-scheduled jobs at sandbox scale) vanishes. The exact
+    # dedup caller hands the edges in either as an eager localCheckpoint
+    # (no corpus) or as an id-only anti join of two checkpoints (corpus
+    # present); either way the count probe is one cheap job.
     n_edges = edges.count()
     if n_edges == 0:
         return edges.sparkSession.createDataFrame(

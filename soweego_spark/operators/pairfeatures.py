@@ -38,8 +38,6 @@ Missing values fill with FEATURE_MISSING_VALUE = 0.0 (constants.py:359).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -218,13 +216,9 @@ def _lev_max_expr(a, b):
     # token arrays overlap (most TRUE matches — the dominant featurize
     # cost is exactly the rows blocking ranked best). Value-identical by
     # construction (1.0 either way, so the pair_features hash gate pins
-    # it). The env knob exists for scripts/featurize_ab.py's fresh-JVM
-    # A/B and is read HERE, at expression-build time, so setting it after
-    # import still takes effect (it was import-time-only before round 6).
-    if os.environ.get("SOWEEGO_LEV_SHORTCIRCUIT", "1") == "1":
-        # CaseWhen evaluates lazily: the cross product only runs for
-        # pairs with NO shared token
-        full = F.when(F.arrays_overlap(a, b), F.lit(1.0)).otherwise(full)
+    # it). CaseWhen evaluates lazily: the cross product only runs for
+    # pairs with NO shared token.
+    full = F.when(F.arrays_overlap(a, b), F.lit(1.0)).otherwise(full)
     return F.when(
         a.isNull() | b.isNull() | (F.size(a) == 0) | (F.size(b) == 0),
         F.lit(None).cast("double"),
@@ -375,66 +369,49 @@ def compute_features(
         if carry_rule_cols
         else []
     )
-    feature_exprs = {
-        "name_exact": lambda: _exact_list_match(
-            F.col("a_name"), F.col("b_name")
+    features = [
+        _exact_list_match(F.col("a_name"), F.col("b_name")).alias(
+            "name_exact"
         ),
-        "name_lev": lambda: _lev_max_expr(
-            F.col("a_name_tokens"), F.col("b_name_tokens")
+        _lev_max_expr(F.col("a_name_tokens"), F.col("b_name_tokens")).alias(
+            "name_lev"
         ),
-        "name_cos": lambda: _cosine_map_expr(
+        _cosine_map_expr(
             F.col("a_name_bigrams"), F.col("a_name_bigram_norm"),
             F.col("b_name_bigrams"), F.col("b_name_bigram_norm"),
-        ),
-        "name_shared": lambda: _shared_tokens(
+        ).alias("name_cos"),
+        _shared_tokens(
             F.col("a_name_tokens"), F.col("b_name_tokens"), band_words,
             band_precomp=(
                 (F.col("a_name_tokens_band"), F.col("b_name_tokens_band"))
                 if "a_name_tokens_band" in pair_rows.columns
                 else None
             ),
+        ).alias("name_shared"),
+        _exact_list_match(F.col("a_urls"), F.col("b_urls")).alias(
+            "url_exact"
         ),
-        "url_exact": lambda: _exact_list_match(
-            F.col("a_urls"), F.col("b_urls")
+        _shared_ratio_min(a_ut, b_ut).alias("url_tok_shared"),
+        _date_sim_expr(F.col("a_born_p"), F.col("b_born_p")).alias(
+            "born_sim"
         ),
-        "url_tok_shared": lambda: _shared_ratio_min(a_ut, b_ut),
-        "born_sim": lambda: _date_sim_expr(
-            F.col("a_born_p"), F.col("b_born_p")
+        _date_sim_expr(F.col("a_died_p"), F.col("b_died_p")).alias(
+            "died_sim"
         ),
-        "died_sim": lambda: _date_sim_expr(
-            F.col("a_died_p"), F.col("b_died_p")
-        ),
-        "desc_cos": lambda: _cosine_map_expr(
+        _cosine_map_expr(
             F.col("a_desc_terms"), F.col("a_desc_norm"),
             F.col("b_desc_terms"), F.col("b_desc_norm"),
+        ).alias("desc_cos"),
+        _shared_ratio_min(a_occ, b_occ).alias("occ_shared"),
+        _shared_tokens(F.col("a_genres"), F.col("b_genres"), []).alias(
+            "genre_shared"
         ),
-        "occ_shared": lambda: _shared_ratio_min(a_occ, b_occ),
-        "genre_shared": lambda: _shared_tokens(
-            F.col("a_genres"), F.col("b_genres"), []
-        ),
-    }
-    # Measurement-only knob (scripts/featurize_ablate.py): replace the
-    # named features with a literal to isolate each column's marginal
-    # cost (the round-2 ablation that found the 876-element literal-array
-    # rebuild). NEVER set outside the ablation harness — it changes
-    # outputs by construction.
-    ablate = {
-        s for s in os.environ.get("SOWEEGO_ABLATE", "").split(",") if s
-    }
-    unknown = ablate - set(feature_exprs)
-    if unknown:
-        raise ValueError(f"SOWEEGO_ABLATE unknown features: {unknown}")
-
-    def fexpr(name: str):
-        if name in ablate:
-            return F.lit(0.5).alias(name)
-        return feature_exprs[name]().alias(name)
-
+    ]
     out = pair_rows.select(
         "url_a",
         "url_b",
         *carried,
-        *[fexpr(name) for name in feature_exprs],
+        *features,
         *([name_jw_column().alias("name_jw")] if include_jw else []),
     )
     fill_cols = FEATURE_COLUMNS + (["name_jw"] if include_jw else [])

@@ -177,6 +177,10 @@ class StageCheckpointer:
                 "an Iceberg write path (runtime jars + catalog); only the "
                 "registration DDL seam is implemented in this sandbox"
             )
+        # Invalidate before overwriting: a crash between the data write
+        # and the manifest write must leave NO manifest, not the old one
+        # pointing at the new config's rows.
+        mf.unlink(missing_ok=True)
         if spec:
             from soweego_spark.sources.readers import write_bucketed_table
 
@@ -216,7 +220,11 @@ class StageCheckpointer:
                 "n_buckets": int(spec.get("n_buckets", 32)),
             }
             manifest["schema_ddl"] = schema_ddl
-        mf.write_text(json.dumps(manifest, indent=2, sort_keys=True))
+        # temp file + atomic rename: a torn write never leaves a half
+        # manifest where load() would read it
+        tmp = mf.with_name(mf.name + ".tmp")
+        tmp.write_text(json.dumps(manifest, indent=2, sort_keys=True))
+        tmp.replace(mf)
         return persisted
 
     def stage(self, name: str, config: dict, compute) -> DataFrame:

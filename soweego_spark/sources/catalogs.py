@@ -46,6 +46,14 @@ from soweego_spark.functions.urls import (
     url_tokens,
 )
 
+# A private non-deterministic twin of the shared URL UDF for
+# musicbrainz_link_tables. asNondeterministic() flips the flag IN PLACE,
+# so calling it on the shared instance would revoke the optimizer's
+# licence at every other call site in the process too.
+_clean_and_validate_nondet = F.pandas_udf(
+    clean_and_validate.func, clean_and_validate.returnType
+).asNondeterministic()
+
 # ---------------------------------------------------------------- shared
 
 # Wikidata QIDs for IMDb professions (public vocabulary; reference
@@ -330,18 +338,9 @@ def discogs_master_tables(masters: DataFrame) -> dict[str, DataFrame]:
 # ------------------------------------------------------------------ IMDb
 
 
-def imdb_person_tables(
-    people: DataFrame, cache_base: bool = False
-) -> dict[str, DataFrame]:
+def imdb_person_tables(people: DataFrame) -> dict[str, DataFrame]:
     """IMDb name-basics rows -> five per-profession person tables + the
     person-movie relationship edges.
-
-    ``cache_base=True`` persists the parsed base frame so the six output
-    tables filter ONE parse instead of re-running the scan + profession/
-    QID/date derivation per table (r7; callers that consume the tables
-    in one session, e.g. the whole-flavor gate union, opt in — the
-    default stays uncached so long-lived jobs control their own cache
-    lifecycle).
 
     Input columns (the TSV reader already turns ``\\N`` into NULL):
     nconst, primaryName, birthYear, deathYear, primaryProfession,
@@ -402,8 +401,6 @@ def imdb_person_tables(
         .withColumn("_born", year_date("birthYear"))
         .withColumn("_died", year_date("deathYear"))
     )
-    if cache_base:
-        base = base.persist()
 
     misc_only = (F.size("_profs") == 1) & (
         F.element_at("_profs", 1) == "miscellaneous"
@@ -600,9 +597,9 @@ def musicbrainz_link_tables(
     # expression is revoked (plan: 2 ArrowEvalPython per branch -> 1).
     first_valid = url.select(
         F.col("id").alias("url_id"),
-        F.element_at(
-            clean_and_validate.asNondeterministic()(F.col("url")), 1
-        ).alias("_url"),
+        F.element_at(_clean_and_validate_nondet(F.col("url")), 1).alias(
+            "_url"
+        ),
     ).filter(F.col("_url").isNotNull())
     linked = (
         one_entity.join(first_valid, "url_id")

@@ -6,8 +6,7 @@ re-expressed as DISTRIBUTED plumbing with the I/O call injected: this
 container has no network by policy, so every function takes the
 fetch/probe/emit callable as a parameter — tests inject deterministic
 stubs, production injects a requests-backed session — while the Spark side
-(bucketing, partitioning, batching, schemas) is real and tested, exactly
-like the multimodal decode stubs.
+(bucketing, partitioning, batching, schemas) is real and tested.
 
 Reference analogues:
   S4  importer/importer.py:180-230  refresh_dump (HEAD Last-Modified ->

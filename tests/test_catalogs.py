@@ -282,3 +282,22 @@ def test_musicbrainz_link_tables_semantics(spark):
     b_links = t["band_links"].collect()
     assert len(b_links) == 1 and b_links[0]["catalog_id"] == "g-bbb"
     assert b_links[0]["is_wiki"] is False
+
+
+def test_musicbrainz_link_tables_leaves_shared_url_udf_deterministic(spark):
+    """musicbrainz_link_tables needs a non-deterministic URL UDF; it must
+    not get one by flipping the shared instance every other call site
+    uses (asNondeterministic() mutates the UDF in place)."""
+    from soweego_spark.functions.urls import clean_and_validate
+
+    url = spark.createDataFrame([("u1", "https://a.example.com")],
+                                "id string, url string")
+    artist = spark.createDataFrame([("1", "g-aaa", "1")],
+                                   "id string, gid string, type_id string")
+    l_artist_url = spark.createDataFrame([("1", "u1")],
+                                         "entity_id string, url_id string")
+    cat.musicbrainz_link_tables(artist, l_artist_url, url)
+
+    shared = url.select(clean_and_validate(F.col("url")))
+    expr = shared._jdf.queryExecution().analyzed().expressions().apply(0)
+    assert expr.deterministic()

@@ -46,6 +46,41 @@ def test_stage_memoization_and_invalidation(spark, root):
     assert mf["config_hash"] == config_hash({"alpha": 2})
 
 
+def test_crash_between_data_and_manifest_write_does_not_resume_wrong_rows(
+    spark, root, monkeypatch
+):
+    """A save that dies after overwriting the stage data but before its
+    manifest lands must not let a resume under the OLD config return the
+    NEW config's rows."""
+    import json as real_json
+
+    from soweego_spark.plans import checkpoint as ckpt_mod
+
+    ck = StageCheckpointer(root, spark)
+    cfg_a, cfg_b = config_hash({"alpha": 1}), config_hash({"alpha": 2})
+    ck.save("s", spark.range(10).withColumnRenamed("id", "x"), cfg_a)
+
+    class Crash(Exception):
+        pass
+
+    class CrashingJson:
+        loads = staticmethod(real_json.loads)
+
+        @staticmethod
+        def dumps(*a, **k):
+            raise Crash("killed before the manifest write")
+
+    monkeypatch.setattr(ckpt_mod, "json", CrashingJson)
+    with pytest.raises(Crash):
+        ck.save("s", spark.range(3).withColumnRenamed("id", "x"), cfg_b)
+    monkeypatch.undo()
+    data = spark.read.parquet(f"{root}/s/data")
+    assert data.count() == 3  # the crash came after the data write
+
+    resumed = ck.load("s", cfg_a)
+    assert resumed is None or resumed.count() == 10
+
+
 def test_bucketed_signatures_default_and_exchange_free_resume(spark, root):
     """Round-4 contract: run_pipeline defaults the signatures stage to
     BUCKETED persistence (by url), and a resumed run's pair-assembly joins
