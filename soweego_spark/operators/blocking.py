@@ -1,26 +1,44 @@
-"""Candidate-pair generation (blocking) — salted multi-key, skew-aware.
+"""Candidate-pair generation (blocking) as one block graph.
 
 Reference analogue: MariaDB FULLTEXT blocking with a top-5 cap per item
-(linker/blocking.py:44-166). Spark-first redesign (SURVEY.md §2.4 B1-B4):
+(linker/blocking.py:44-166). Spark-first redesign (SURVEY.md §2.4 B1-B4).
 
-1. **Name-token inverted index** — explode ``name_tokens``, drop tokens whose
-   document frequency exceeds ``token_df_cap`` (the hot-token/skew guard:
-   a Zipfian token would otherwise explode the self-join quadratically; the
-   cap is correctness-neutral because a token shared by thousands of docs
-   carries no linking signal — same spirit as the reference's FTS relevance
-   ranking + LIMIT 5), self-join on token, score pairs by shared-token
-   count, keep the top ``top_k`` per document (window over the pair list —
-   the reference's only top-k, blocking.py:142).
-2. **Exact outbound-URL key** — explode validated ``urls``; documents citing
-   the same profile link are candidates (B4 analogue).
-3. **MinHash-LSH bands** — ``num_hashes`` per-shingle xxhash64 minima computed
-   entirely JVM-side with ``array_min(transform(...))`` (no explode, no
-   Python), banded ``rows_per_band`` at a time; band buckets larger than
-   ``band_cap`` are dropped (skew guard).
+Every blocking key is a posting list (SparkER-style): the documents that
+carry it. Three key families feed ONE key index ``(url, family, key)``:
 
-All three key families are unioned and deduped into ``(url_a, url_b)`` with
-``url_a < url_b``. Every join here is an equi-join on a key column —
-Catalyst picks shuffle-hash/SMJ and AQE splits skewed partitions at runtime.
+1. **Name tokens** — ``name_tokens``; pairs are ranked by shared-token
+   count and the top ``top_k`` per document are kept (window over the pair
+   list — the reference's only top-k, blocking.py:142).
+2. **Outbound URLs** — validated ``urls``; documents citing the same
+   profile link are candidates (B4 analogue).
+3. **MinHash-LSH bands** — ``num_hashes`` per-shingle xxhash64 minima
+   computed JVM-side with ``array_min(transform(...))`` (no Python), banded
+   ``rows_per_band`` at a time into ``"<band>:<hash>"`` keys.
+
+The graph is built in one pass over the index:
+
+* **One hot-key guard.** A key whose document frequency exceeds its
+  family's cap (``token_df_cap``, ``URL_DF_CAP``, ``BAND_CAP``) carries no
+  linking signal (same spirit as the reference's relevance ranking +
+  LIMIT 5), and its posting list would be quadratic in pairs. One count of
+  all keys finds the over-cap ones; they are dropped by one broadcast ANTI
+  join (that list is tiny BY CONSTRUCTION — the Zipf head — whereas the
+  keep-list is the whole vocabulary). The drop happens map-side, BEFORE
+  the posting-list shuffle: a hot key's rows never travel to, or pile up
+  in, a single reducer.
+* **Posting lists, pairs inside each list.** One ``groupBy(family, key)``
+  collects the capped lists (at most cap urls each); the ``url_a < url_b``
+  pairs of each sorted list are emitted in-row.
+* **One pair aggregate.** ``shared_tokens`` counts the token-family hits
+  of a pair (with multiplicity, as a token self-join would); a second
+  column flags any URL or LSH hit. One window ranks each token pair on
+  both of its documents and keeps the per-doc top-k; a flagged pair is
+  kept outright. One final ``distinct`` folds the copies.
+
+Why one key index and not a self-join per family: under AQE the two
+sides of a self-join and each family's hot-key broadcast plan as separate
+subtrees with no exchange reuse, so three families cost three times the
+scans, exchanges and jobs of one graph.
 """
 
 from __future__ import annotations
@@ -28,12 +46,138 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+URL_DF_CAP = 50
+BAND_CAP = 200
 
-def _canonical(pairs: DataFrame) -> DataFrame:
-    return pairs.select(
-        F.least("url_a", "url_b").alias("url_a"),
-        F.greatest("url_a", "url_b").alias("url_b"),
-    ).filter(F.col("url_a") != F.col("url_b"))
+# key families of the block graph
+_TOKEN, _URL, _LSH = 0, 1, 2
+
+
+def _key_index(sig: DataFrame, families: list[tuple[int, object]]) -> DataFrame:
+    """(url, family, key) rows: one explode of every family's key array.
+
+    A null array contributes no keys and a null element pairs nothing, as
+    in an equi-join on the key."""
+    arrays = [
+        F.coalesce(keys, F.array().cast("array<string>"))
+        for _, keys in families
+    ]
+    # posexplode of the concatenated arrays; the position says which
+    # family an element came from (no per-element tagging lambda)
+    family = F.lit(families[-1][0])
+    bound = F.lit(0)
+    bounds = []
+    for i, arr in enumerate(arrays[:-1]):
+        bound = bound + F.size(arr)
+        bounds.append(bound.alias(f"_b{i}"))
+    for i in reversed(range(len(arrays) - 1)):
+        family = F.when(F.col("pos") < F.col(f"_b{i}"), families[i][0]).otherwise(
+            family
+        )
+    idx = sig.select(
+        "url", *bounds, F.posexplode(F.concat(*arrays)).alias("pos", "key")
+    )
+    return idx.filter(F.col("key").isNotNull()).select(
+        "url", family.alias("family"), "key"
+    )
+
+
+def _block_graph(
+    sig: DataFrame,
+    families: list[tuple[int, object, int]],
+    top_k: int = 0,
+) -> DataFrame:
+    """Candidate pairs from capped posting lists of ``families``
+    (``(family id, array<string> key column, df cap)`` each).
+
+    Returns (url_a, url_b, shared_tokens), url_a < url_b, distinct. When
+    the token family takes part, token pairs are kept only within each
+    document's ``top_k``; pairs from the other families are kept outright.
+    """
+    idx = _key_index(sig, [(fam, keys) for fam, keys, _ in families])
+
+    cap = F.lit(None)
+    for fam, _, df_cap in families:
+        cap = F.when(F.col("family") == fam, df_cap).otherwise(cap)
+    hot = (
+        idx.groupBy("family", "key")
+        .agg(F.count("*").alias("df"))
+        .filter(F.col("df") > cap)
+        .select("family", "key")
+    )
+    lists = (
+        idx.join(F.broadcast(hot), ["family", "key"], "left_anti")
+        .groupBy("family", "key")
+        .agg(F.array_sort(F.collect_list("url")).alias("urls"))
+    )
+    # every (i < j) position pair of the sorted list; a url listed twice
+    # under one key (a repeated token) pairs with others once per copy
+    in_list = F.flatten(
+        F.transform(
+            "urls",
+            lambda a, i: F.transform(
+                F.slice("urls", i + 2, F.size("urls") - i - 1),
+                lambda b: F.struct(a.alias("url_a"), b.alias("url_b")),
+            ),
+        )
+    )
+    pairs = (
+        lists.select("family", F.explode(in_list).alias("p"))
+        .select("family", "p.url_a", "p.url_b")
+        .filter(F.col("url_a") < F.col("url_b"))
+        .groupBy("url_a", "url_b")
+        .agg(
+            F.count(F.when(F.col("family") == _TOKEN, 1)).alias("shared_tokens"),
+            F.max(F.col("family") != _TOKEN).alias("other_hit"),
+        )
+    )
+    if _TOKEN not in [fam for fam, _, _ in families]:
+        return pairs.select("url_a", "url_b", "shared_tokens")
+
+    if top_k < 1:
+        raise ValueError("top_k must be at least 1")
+
+    # Top-k per document on either side (the dedup-symmetric version of the
+    # reference's per-item LIMIT 5) in ONE window. Each token pair is ranked
+    # twice: in partition (url_a, 'gt') and in (url_b, 'lt'). A pair another
+    # family found also gets a partition of its own (``own`` = url_b), where
+    # it ranks first. The `rn <= top_k` filter directly after the window
+    # keeps the WindowGroupLimit per-partition top-k pushdown, which trims
+    # the window shuffle map-side.
+    def row(key, other, direction, own, use):
+        return F.struct(
+            F.col(key).alias("key"),
+            F.col(other).alias("other"),
+            F.lit(direction).alias("dir"),
+            own.alias("own"),
+            F.col("shared_tokens"),
+            use.alias("use"),
+        )
+
+    token_hit = F.col("shared_tokens") > 0
+    none = F.lit(None).cast("string")
+    rows = pairs.select(
+        F.explode(
+            F.array(
+                row("url_a", "url_b", "gt", none, token_hit),
+                row("url_b", "url_a", "lt", none, token_hit),
+                row("url_a", "url_b", "gt", F.col("url_b"), F.col("other_hit")),
+            )
+        ).alias("e")
+    ).filter("e.use").select("e.key", "e.other", "e.dir", "e.own", "e.shared_tokens")
+    w = Window.partitionBy("key", "dir", "own").orderBy(
+        F.desc("shared_tokens"), F.asc("other")
+    )
+    kept = rows.withColumn("rn", F.row_number().over(w)).filter(
+        F.col("rn") <= top_k
+    )
+    gt = F.col("dir") == "gt"
+    # a pair kept from more than one partition appears more than once
+    return kept.select(
+        F.when(gt, F.col("key")).otherwise(F.col("other")).alias("url_a"),
+        F.when(gt, F.col("other")).otherwise(F.col("key")).alias("url_b"),
+        "shared_tokens",
+    ).distinct()
 
 
 def token_blocking(
@@ -41,99 +185,22 @@ def token_blocking(
     top_k: int = 5,
     token_df_cap: int = 1000,
     token_col: str = "name_tokens",
-    dedup: bool = True,
 ) -> DataFrame:
-    """Inverted-index self-join on name tokens with per-doc top-k.
+    """Name-token posting lists with per-doc top-k.
 
     Returns (url_a, url_b, shared_tokens) — ``shared_tokens`` is the rank
     score (reference: FTS relevance).
     """
-    idx = sig.select("url", F.explode(token_col).alias("token"))
-
-    # Hot-token guard: document frequency per token, computed once. The
-    # filter is a broadcast ANTI join on the over-cap tokens — that list is
-    # tiny BY CONSTRUCTION (Zipf head), whereas the under-cap keep-list is
-    # the whole vocabulary, which at web scale is billions of rows and
-    # not broadcastable.
-    df_counts = idx.groupBy("token").agg(F.count("*").alias("df"))
-    hot = df_counts.filter(F.col("df") > token_df_cap).select("token")
-    idx = idx.join(F.broadcast(hot), "token", "left_anti")
-
-    left = idx.select(F.col("token"), F.col("url").alias("url_a"))
-    right = idx.select(F.col("token"), F.col("url").alias("url_b"))
-    pairs = (
-        left.join(right, "token")
-        .filter(F.col("url_a") < F.col("url_b"))
-        .groupBy("url_a", "url_b")
-        .agg(F.count("*").alias("shared_tokens"))
+    return _block_graph(
+        sig, [(_TOKEN, F.col(token_col), token_df_cap)], top_k=top_k
     )
 
-    # Top-k per document on either side (the dedup-symmetric version of the
-    # reference's per-item LIMIT 5). Implemented as ONE window over a
-    # direction-tagged mirror of the pair list instead of two windows
-    # unioned: partition (key, dir='gt') reproduces exactly the old
-    # url_a-window partition and (key, dir='lt') the url_b one, so the
-    # result set is identical, while the pair aggregate's lineage runs
-    # ONCE (no cache to leak in a long-lived session — round-1 review
-    # item), there is a single window shuffle on (key, dir) instead of
-    # two, and the `row_number() <= k` filter directly after the window
-    # keeps the WindowGroupLimit per-partition top-k pushdown.
-    mirrored = pairs.select(
-        F.explode(
-            F.array(
-                F.struct(
-                    F.col("url_a").alias("key"),
-                    F.col("url_b").alias("other"),
-                    F.lit("gt").alias("dir"),
-                    F.col("shared_tokens"),
-                ),
-                F.struct(
-                    F.col("url_b").alias("key"),
-                    F.col("url_a").alias("other"),
-                    F.lit("lt").alias("dir"),
-                    F.col("shared_tokens"),
-                ),
-            )
-        ).alias("e")
-    ).select("e.*")
-    w = Window.partitionBy("key", "dir").orderBy(
-        F.desc("shared_tokens"), F.asc("other")
-    )
-    kept = (
-        mirrored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= top_k)
-    )
-    out = kept.select(
-        F.when(F.col("dir") == "gt", F.col("key"))
-        .otherwise(F.col("other"))
-        .alias("url_a"),
-        F.when(F.col("dir") == "gt", F.col("other"))
-        .otherwise(F.col("key"))
-        .alias("url_b"),
-        "shared_tokens",
-    )
-    # a pair kept from BOTH mirror directions appears twice; callers that
-    # union several key families and dedup once at the end (see
-    # block_candidates) skip this shuffle via dedup=False
-    return out.distinct() if dedup else out
 
-
-def url_blocking(
-    sig: DataFrame, url_df_cap: int = 50, dedup: bool = True
-) -> DataFrame:
+def url_blocking(sig: DataFrame, url_df_cap: int = URL_DF_CAP) -> DataFrame:
     """Documents sharing an exact outbound URL."""
-    idx = sig.filter(F.col("urls").isNotNull()).select(
-        "url", F.explode("urls").alias("out_url")
+    return _block_graph(sig, [(_URL, F.col("urls"), url_df_cap)]).select(
+        "url_a", "url_b"
     )
-    counts = idx.groupBy("out_url").agg(F.count("*").alias("df"))
-    hot = counts.filter(F.col("df") > url_df_cap).select("out_url")
-    idx = idx.join(F.broadcast(hot), "out_url", "left_anti")
-    left = idx.select("out_url", F.col("url").alias("url_a"))
-    right = idx.select("out_url", F.col("url").alias("url_b"))
-    out = _canonical(
-        left.join(right, "out_url").filter(F.col("url_a") < F.col("url_b"))
-    )
-    return out.distinct() if dedup else out
 
 
 def shingles(col, n: int = 3):
@@ -170,14 +237,44 @@ def minhash_signature(shingle_col, num_hashes: int = 12):
     )
 
 
+def _with_band_keys(
+    sig: DataFrame,
+    text_expr=None,
+    num_hashes: int = 12,
+    rows_per_band: int = 2,
+    shingle_size: int = 3,
+) -> DataFrame:
+    """``sig`` plus ``_bands``: ARRAY<STRING> of ``"<band>:<hash>"``
+    MinHash-LSH band keys over a text expression (default: the
+    concatenated normalized name). The signature is its own projection so
+    that each band reads it instead of recomputing it."""
+    if text_expr is None:
+        text_expr = F.array_join(F.col("name"), " ")
+    mh = minhash_signature(shingles(text_expr, shingle_size), num_hashes)
+    bands = F.array(
+        *[
+            F.concat(
+                F.lit(f"{b}:"),
+                F.hash(
+                    *[
+                        F.element_at("_mh", b * rows_per_band + r + 1)
+                        for r in range(rows_per_band)
+                    ]
+                ).cast("string"),
+            )
+            for b in range(num_hashes // rows_per_band)
+        ]
+    )
+    return sig.withColumn("_mh", mh).withColumn("_bands", bands)
+
+
 def lsh_blocking(
     sig: DataFrame,
     text_expr=None,
     num_hashes: int = 12,
     rows_per_band: int = 2,
-    band_cap: int = 200,
+    band_cap: int = BAND_CAP,
     shingle_size: int = 3,
-    dedup: bool = True,
 ) -> DataFrame:
     """MinHash-LSH band blocking over a text expression.
 
@@ -185,46 +282,10 @@ def lsh_blocking(
     in the same band with high probability even when token blocking misses
     (misspellings change tokens but only a few shingles).
     """
-    if text_expr is None:
-        text_expr = F.array_join(F.col("name"), " ")
-    n_bands = num_hashes // rows_per_band
-
-    with_sig = sig.select(
-        "url",
-        minhash_signature(
-            shingles(text_expr, shingle_size), num_hashes
-        ).alias("mh"),
+    sig = _with_band_keys(sig, text_expr, num_hashes, rows_per_band, shingle_size)
+    return _block_graph(sig, [(_LSH, F.col("_bands"), band_cap)]).select(
+        "url_a", "url_b"
     )
-    bands = with_sig.select(
-        "url",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.hash(
-                            *[
-                                F.element_at("mh", b * rows_per_band + r + 1)
-                                for r in range(rows_per_band)
-                            ]
-                        ).alias("sig"),
-                    )
-                    for b in range(n_bands)
-                ]
-            )
-        ).alias("bk"),
-    ).select("url", "bk.band", "bk.sig")
-
-    counts = bands.groupBy("band", "sig").agg(F.count("*").alias("df"))
-    hot = counts.filter(F.col("df") > band_cap).select("band", "sig")
-    bands = bands.join(F.broadcast(hot), ["band", "sig"], "left_anti")
-
-    left = bands.select("band", "sig", F.col("url").alias("url_a"))
-    right = bands.select("band", "sig", F.col("url").alias("url_b"))
-    out = _canonical(
-        left.join(right, ["band", "sig"]).filter(F.col("url_a") < F.col("url_b"))
-    )
-    return out.distinct() if dedup else out
 
 
 def block_candidates(
@@ -235,23 +296,15 @@ def block_candidates(
     use_url_key: bool = True,
     lsh_rows_per_band: int = 3,
 ) -> DataFrame:
-    """Union of all blocking keys -> distinct candidate pairs
-    (url_a, url_b) with url_a < url_b.
-
-    Each family skips its internal dedup shuffle (dedup=False): the single
-    distinct AFTER the union dedups within and across families at once —
-    one Exchange of the pair set instead of up to four.
-    """
-    pairs = token_blocking(
-        sig, top_k=top_k, token_df_cap=token_df_cap, dedup=False
-    ).select("url_a", "url_b")
+    """All blocking keys in one block graph -> distinct candidate pairs
+    (url_a, url_b) with url_a < url_b."""
+    families = [(_TOKEN, F.col("name_tokens"), token_df_cap)]
     if use_url_key:
-        pairs = pairs.unionByName(url_blocking(sig, dedup=False))
+        families.append((_URL, F.col("urls"), URL_DF_CAP))
     if use_lsh:
-        pairs = pairs.unionByName(
-            lsh_blocking(sig, rows_per_band=lsh_rows_per_band, dedup=False)
-        )
-    return pairs.distinct()
+        sig = _with_band_keys(sig, rows_per_band=lsh_rows_per_band)
+        families.append((_LSH, F.col("_bands"), BAND_CAP))
+    return _block_graph(sig, families, top_k=top_k).select("url_a", "url_b")
 
 
 def subset_token_pairs(

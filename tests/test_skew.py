@@ -125,104 +125,22 @@ def test_subset_pairs_wd_side_cap_still_applies(spark):
 
 
 def test_token_blocking_leaves_no_cached_rdds(spark):
-    """blocking.py caches its shared pair aggregate internally; repeated
-    calls in a long-lived session must not accumulate persisted RDDs."""
-    from pyspark.sql import functions as F
-
-    from soweego_spark.operators.blocking import token_blocking
-
+    """Repeated blocking calls in a long-lived session must not accumulate
+    persisted RDDs: the block graph runs from lineage, with no internal
+    cache to release."""
     sig = spark.createDataFrame(
-        [(f"u{i}", [f"t{i % 7}", f"t{(i + 1) % 7}", "shared"]) for i in range(40)],
-        "url string, name_tokens array<string>",
+        [
+            (f"u{i}", [f"n{i % 5}"], [f"t{i % 7}", f"t{(i + 1) % 7}", "shared"],
+             [f"https://x.example/{i % 3}"])
+            for i in range(40)
+        ],
+        "url string, name array<string>, name_tokens array<string>, "
+        "urls array<string>",
     )
     jsc = spark.sparkContext._jsc.sc()
     before = jsc.getPersistentRDDs().size()
     for _ in range(3):
-        token_blocking(sig, top_k=3).count()
+        blk.token_blocking(sig, top_k=3).count()
+        blk.block_candidates(sig, top_k=3).count()
     after = jsc.getPersistentRDDs().size()
     assert after <= before, (before, after)
-
-
-def test_salted_join_matches_plain_join(spark):
-    """salted_join == plain join on a planted-hot-key input, and the hot
-    key's rows really spread across multiple salts."""
-    from pyspark.sql import functions as F
-
-    from soweego_spark.operators.skew import salted_join, with_salt
-
-    big = spark.createDataFrame(
-        [("hot", i) for i in range(500)] + [(f"k{i}", i) for i in range(50)],
-        "k string, v long",
-    )
-    small = spark.createDataFrame(
-        [("hot", "H"), ("k1", "A"), ("k2", "B")], "k string, tag string"
-    )
-    plain = {(r["k"], r["v"], r["tag"]) for r in big.join(small, "k").collect()}
-    salted = {
-        (r["k"], r["v"], r["tag"])
-        for r in salted_join(big, small, "k", n_salts=8).collect()
-    }
-    assert salted == plain and len(plain) == 502
-
-    n_hot_salts = (
-        with_salt(big, 8).filter(F.col("k") == "hot")
-        .select("_salt").distinct().count()
-    )
-    assert n_hot_salts > 1  # the hot key fans out
-
-
-def test_salted_join_determinism_and_left(spark):
-    from soweego_spark.operators.skew import salted_join
-
-    big = spark.createDataFrame(
-        [("a", 1), ("b", 2), ("c", 3)], "k string, v long"
-    )
-    small = spark.createDataFrame([("a", "x")], "k string, tag string")
-    out1 = sorted(map(tuple, salted_join(big, small, "k", 4, "left").collect()))
-    out2 = sorted(map(tuple, salted_join(big, small, "k", 4, "left").collect()))
-    assert out1 == out2
-    assert out1 == [("a", 1, "x"), ("b", 2, None), ("c", 3, None)]
-
-
-def test_salted_collect_set_matches_plain(spark):
-    from pyspark.sql import functions as F
-
-    from soweego_spark.operators.skew import salted_collect_set
-
-    df = spark.createDataFrame(
-        [("hot", f"v{i % 37}") for i in range(400)]
-        + [("cold", "only")],
-        "k string, v string",
-    )
-    plain = {
-        r["k"]: sorted(r["s"])
-        for r in df.groupBy("k").agg(F.collect_set("v").alias("s")).collect()
-    }
-    salted = {
-        r["k"]: list(r["values"])
-        for r in salted_collect_set(df, "k", "v", n_salts=8).collect()
-    }
-    assert salted == plain
-
-
-def test_repartition_by_key_histogram_preserves_rows(spark):
-    from soweego_spark.operators.skew import repartition_by_key_histogram
-
-    df = spark.createDataFrame(
-        [("hot", i) for i in range(1000)] + [(f"k{i}", i) for i in range(100)],
-        "k string, v long",
-    )
-    out = repartition_by_key_histogram(
-        df, "k", target_rows_per_partition=100, sample_fraction=0.5
-    )
-    assert out.count() == 1100
-    assert sorted(out.columns) == ["k", "v"]
-
-
-def test_repartition_histogram_empty_sample(spark):
-    """A sample that observes nothing must still repartition validly."""
-    from soweego_spark.operators.skew import repartition_by_key_histogram
-
-    df = spark.createDataFrame([("k", 1), ("j", 2)], "k string, v long")
-    out = repartition_by_key_histogram(df, "k", sample_fraction=1e-9)
-    assert out.count() == 2
