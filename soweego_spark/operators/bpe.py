@@ -52,6 +52,8 @@ from typing import Iterable, Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from soweego_spark.operators.dedup import explode_once
+
 SEP = "\x1f"  # symbol boundary (unit separator); stripped from input text
 RS = "\x1e"  # packs (search, replace) into one string where needed
 
@@ -79,13 +81,11 @@ def word_type_counts(
     docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:
     """(word, cnt): corpus word-frequency table. One explode + one
-    map-side-combined groupBy — the only corpus-scale shuffle in training."""
-    return (
-        words(docs, id_col, text_col)
-        .select(F.explode("w").alias("word"))
-        .groupBy("word")
-        .agg(F.count("*").alias("cnt"))
-    )
+    map-side-combined groupBy — the only corpus-scale shuffle in training.
+    The explode is :func:`dedup.explode_once`: an inferred filter on
+    ``w`` would split every doc's text a second time."""
+    occ = explode_once(words(docs, id_col, text_col), [], "w", "word")
+    return occ.groupBy("word").agg(F.count("*").alias("cnt"))
 
 
 # ---------------------------------------------------------------------------
@@ -223,9 +223,8 @@ def bpe_encode(
     subword tokens. Encoding cost is paid per TYPE (distinct-word fold),
     occurrences get tokens via an equi-join on word — broadcastable when
     the type table is small, AQE decides otherwise."""
-    wx = (
-        words(docs, id_col, text_col)
-        .select("doc_id", F.posexplode("w").alias("wpos", "word"))
+    wx = explode_once(
+        words(docs, id_col, text_col), ["doc_id"], "w", "word", pos="wpos"
     )
     types = encode_types(wx.select("word").distinct(), merges)
     return wx.join(types, "word").select("doc_id", "wpos", "word", "toks", "enc")

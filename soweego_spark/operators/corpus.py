@@ -30,7 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from soweego_spark.operators.dedup import md5_60
+from soweego_spark.operators.dedup import explode_once, md5_60
 
 TWO_60 = float(1 << 60)
 
@@ -59,23 +59,25 @@ def gram_occurrences(
     (and no O(array) sibling rides next to the generator; see the CC
     degree-quadratic note in CLAUDE.md).
 
-    The sequence end is greatest-clamped to 0 even though short docs are
-    filtered out: InferFiltersFromGenerate pushes a size(transform(...))
-    > 0 conjunct down NEXT TO the size guard, where it can evaluate the
-    transform on unfiltered rows — an unclamped sequence(0, size-k) goes
-    DESCENDING for size < k and slice(w, 0, k) throws under ANSI. The
-    clamp makes the expression total; the size>=k filter still excludes
-    the row, so no partial gram ever survives (and a partial gram string
-    can't collide with a full one anyway — fewer than k-1 spaces)."""
-    w = _words(docs, id_col, text_col).where(F.size("w") >= k)
+    Short docs get the EMPTY hash array (a size guard in the projection:
+    a ``where`` on ``w`` would be pushed below the word-list projection
+    and split the text a second time), and the explode is
+    :func:`dedup.explode_once`, so the inferred size filter never
+    rebuilds the array with the text split once per gram (CLAUDE.md
+    round-6 note). The sequence end stays greatest-clamped to 0: an
+    unclamped sequence(0, size-k) goes DESCENDING for size < k and
+    slice(w, 0, k) throws under ANSI wherever the transform is
+    evaluated unguarded."""
+    w = _words(docs, id_col, text_col)
     hashes = F.transform(
         F.sequence(F.lit(0), F.greatest(F.size("w") - k, F.lit(0))),
         lambda i: md5_60(F.concat_ws(" ", F.slice("w", i + 1, k))),
     )
-    return (
-        w.select("doc_id", hashes.alias("ghs"))
-        .select("doc_id", F.posexplode("ghs").alias("s", "gh"))
+    empty = F.slice(F.array(F.lit(0).cast("long")), 1, 0)
+    ghs = w.select(
+        "doc_id", F.when(F.size("w") >= k, hashes).otherwise(empty).alias("ghs")
     )
+    return explode_once(ghs, ["doc_id"], "ghs", "gh", pos="s")
 
 
 def duplicated_spans(
@@ -316,9 +318,9 @@ def pack_sequences(
     100k shards = 1 GB/shard). The window runs one task per shard; the
     cumsum itself is O(rows in shard).
 
-    The explode's input sequence is clamped ascending (last >= first)
-    so the expression stays total if InferFiltersFromGenerate evaluates
-    it on rows the n >= 1 guard excludes (CLAUDE.md round-6 note).
+    The segment explode runs over an inline sequence, which gets no
+    inferred filter (CLAUDE.md round-6 note); its end is still clamped
+    ascending (last >= first), so the sequence is total on any row.
     """
     w = _words(docs, id_col, text_col).select(
         "doc_id", F.size("w").cast("long").alias("n")
@@ -410,9 +412,9 @@ def epoch_mix(
 
     Scale: the weight table is |groups| rows, broadcast; the keep/repeat
     decision and the copy explode are pure column expressions — ZERO
-    shuffles. The explode's sequence is total even if evaluated on
-    weight-0 rows the guard excludes (descending [0,-1] never throws;
-    see the InferFiltersFromGenerate note on gram_occurrences).
+    shuffles. The copy explode runs over an inline sequence, which gets
+    no inferred filter (CLAUDE.md round-6 note); the sequence would be
+    total even on weight-0 rows (descending [0,-1] never throws).
     """
     spark = docs.sparkSession
     wdf = spark.createDataFrame(

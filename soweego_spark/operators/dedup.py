@@ -63,6 +63,32 @@ def md5_60(col):
     return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
 
 
+def explode_once(
+    df: DataFrame,
+    keep: list[str],
+    arr: str,
+    alias: str,
+    pos: str | None = None,
+) -> DataFrame:
+    """``df.select(*keep, F.explode(arr).alias(alias))`` without the
+    filter Catalyst infers for it: the same rows (a null or empty array
+    gives none, a null element is kept); with ``pos`` also the 0-based
+    position, as ``posexplode``.
+
+    InferFiltersFromGenerate puts ``size(arr) > 0`` below a NON-outer
+    generator over an attribute, and PushDownPredicates then inlines the
+    attribute's defining expression into that filter, so an array the
+    same query derives is built twice. Where the definition reads the
+    word list inside a ``transform`` lambda (shingles, gram hashes), the
+    inlined copy splits the text once per element: O(words^2) per doc.
+    Outer generators get no inferred filter, and the only row of
+    ``posexplode_outer`` with a null position is the one it adds for a
+    null or empty array."""
+    p = pos or "_pos"
+    out = df.select(*keep, F.posexplode_outer(arr).alias(p, alias)).where(
+        F.col(p).isNotNull()
+    )
+    return out if pos else out.drop(p)
 
 
 def md5_60_py(s: str) -> int:
@@ -113,7 +139,10 @@ def shingles(
 
     Shingled text is what the north_star asks MinHash to run over; built
     from ``transform`` over a sequence of start offsets — no explode until
-    the caller needs one.
+    the caller needs one. The lambda reads the word list ``w``, so a
+    caller that explodes ``tokens`` must use :func:`explode_once`: a
+    pushed-down inferred filter would inline ``w`` and split the text
+    once per shingle.
     """
     words = F.filter(
         F.split(F.lower(F.col(text_col)), " "), lambda t: t != F.lit("")
@@ -141,7 +170,8 @@ def minhash_signatures(
     deterministic hash family member. One explode + one hash-agg with
     ``num_perm`` partial-min columns: the 64 xxhash64 projections stay in
     whole-stage codegen and map-side combine keeps the shuffle at num_perm
-    longs per doc.
+    longs per doc. The explode is :func:`explode_once`, so the token
+    array (shingles, built in the same query) is built once per doc.
 
     The output deliberately does NOT carry the tokens column: every
     consumer immediately derives band keys (which drop it) and the
@@ -157,7 +187,7 @@ def minhash_signatures(
     expressions over an exploded index have no lambdas to collide and
     benchmark ~5x faster than the interpreted nested-lambda alternative.
     """
-    exploded = toks.select("doc_id", F.explode("tokens").alias("token"))
+    exploded = explode_once(toks, ["doc_id"], "tokens", "token")
     if hash_family == "md5":
         # Signed-64 safety bound for h1 + i*h2 under ANSI mode: h1 < 2^60
         # and h2 < 2^55, so h1 + i*h2 <= 2^60 + i*2^55 stays below 2^63
@@ -211,7 +241,12 @@ def band_keys(
     injective encoding — no second hash needed; equality classes are
     exactly "all rows of the band agree").
     """
-    assert num_perm % bands == 0, "num_perm must be divisible by bands"
+    # ValueError, not assert: under `python -O` num_perm=30, bands=8
+    # would silently band only 24 of the 30 permutations
+    if num_perm % bands != 0:
+        raise ValueError(
+            f"num_perm must be divisible by bands, got {num_perm} and {bands}"
+        )
     rows_per_band = num_perm // bands
     band_structs = F.array(
         *[
@@ -249,8 +284,8 @@ def minhash_lsh_candidates(
     exact token-set Jaccard >= threshold. Step (2) makes the output
     deterministic precision-1.0: LSH only decides *which* pairs get the
     exact check (the sub-quadratic part); it never admits a false positive.
+    ``num_perm`` not divisible by ``bands`` raises ValueError (band_keys).
     """
-    assert num_perm % bands == 0, "num_perm must be divisible by bands"
 
     # Deliberately NO persist here (r7, measured): this is one lazy query
     # execution, and AQE's runtime exchange reuse already deduplicates
@@ -323,18 +358,18 @@ def simhash_signatures(
     # md5_60 is a 60-bit hash: with bits > 60 the top signature bits are
     # constant, so the highest pigeonhole block barely varies, its buckets
     # blow past the cap and get dropped, and the "one block must match"
-    # recall guarantee silently breaks. Enforce instead of document.
-    assert not (hash_family == "md5" and bits > 60), (
-        "md5 hash family supports at most bits=60"
-    )
+    # recall guarantee silently breaks. Enforce instead of document
+    # (ValueError, not assert, so `python -O` keeps the guard).
+    if hash_family == "md5" and bits > 60:
+        raise ValueError(f"md5 hash family supports at most bits=60, got {bits}")
     toks = token_sets(docs, id_col=id_col, text_col=text_col)
     token_hash = (
         md5_60(F.col("token")) if hash_family == "md5"
         else F.xxhash64("token")
     )
-    exploded = toks.select(
-        "doc_id", F.explode("tokens").alias("token")
-    ).select("doc_id", token_hash.alias("h"))
+    exploded = explode_once(toks, ["doc_id"], "tokens", "token").select(
+        "doc_id", token_hash.alias("h")
+    )
     sums = [
         F.sum(
             F.when(

@@ -39,7 +39,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from soweego_spark.operators.dedup import md5_60
+from soweego_spark.operators.dedup import explode_once, md5_60
 
 
 GROUP_SEP = "\x1f"  # namespaces the gram hash by group (per-language models)
@@ -49,11 +49,13 @@ def _gram_hash_array(wcol, k: int, ns=None):
     """array<long> of order-k gram hashes of a word-list column — total
     for any input: the sequence end is greatest-clamped AND the whole
     transform is guarded by a size test (short docs yield the empty
-    array, never a partial gram), so it stays safe wherever
-    InferFiltersFromGenerate evaluates it (CLAUDE.md round-6 note).
-    ``ns`` (optional column) prefixes every hash input with
-    ``<ns>\\x1f`` — the per-group namespacing trick: one hash space holds
-    one independent model PER GROUP with no composite join keys."""
+    array, never a partial gram). The lambda reads ``wcol``, so explode
+    the result with :func:`dedup.explode_once` (CLAUDE.md round-6 note):
+    an inferred filter pushed below the projection would re-split the
+    text once per gram. ``ns`` (optional column) prefixes every hash
+    input with ``<ns>\\x1f`` — the per-group namespacing trick: one hash
+    space holds one independent model PER GROUP with no composite join
+    keys."""
     empty = F.slice(F.array(F.lit(0).cast("long")), 1, 0)
 
     # single-parameter callable ONLY: F.transform treats a two-parameter
@@ -97,7 +99,8 @@ def lm_counts(
     reference slice's order-n AND order-(n-1) grams in one hash-keyed
     table (orders are prefix-free, see module docstring). ONE scan of the
     reference slice (both orders' hash arrays concatenated below a single
-    explode), one map-side-combined shuffle, vocabulary-sized output.
+    :func:`dedup.explode_once`, so each doc's gram hashes are built once),
+    one map-side-combined shuffle, vocabulary-sized output.
 
     ``group_col`` (e.g. ``lang``) trains an independent model per group —
     the CCNet per-language setup — by namespacing every hash with the
@@ -117,11 +120,40 @@ def lm_counts(
             "ghs"
         )
     )
-    return (
-        b.select(F.explode("ghs").alias("gh"))
-        .groupBy("gh")
-        .agg(F.count("*").alias("c"))
+    gh = explode_once(b, [], "ghs", "gh")
+    return gh.groupBy("gh").agg(F.count("*").alias("c"))
+
+
+def _gram_prefix_array(n: int, ns=None):
+    """array<struct<gh, ph>> over the word list ``w``: every order-n gram
+    hash with its order-(n-1) prefix hash, in position order. Docs
+    shorter than n get the EMPTY array, never a partial gram (size guard
+    in the projection, not a ``where``: a filter on ``w`` is pushed below
+    the word-list projection and splits the text a second time); the
+    sequence end stays greatest-clamped so the transform is total even
+    on its own."""
+
+    def h(i, k):
+        g = F.concat_ws(" ", F.slice("w", i + 1, k))
+        if ns is not None:
+            g = F.concat_ws(GROUP_SEP, ns, g)
+        return md5_60(g)
+
+    structs = F.transform(
+        F.sequence(F.lit(0), F.greatest(F.size("w") - n, F.lit(0))),
+        lambda i: F.struct(h(i, n).alias("gh"), h(i, n - 1).alias("ph")),
     )
+    empty = F.slice(
+        F.array(
+            F.struct(
+                F.lit(0).cast("long").alias("gh"),
+                F.lit(0).cast("long").alias("ph"),
+            )
+        ),
+        1,
+        0,
+    )
+    return F.when(F.size("w") >= n, structs).otherwise(empty)
 
 
 def gram_prefix_occurrences(
@@ -135,28 +167,15 @@ def gram_prefix_occurrences(
     hash and its order-(n-1) prefix hash, 0-based position. Docs shorter
     than n emit nothing. Both hashes are materialized in a projection
     BELOW the explode (no O(array) sibling beside the generator), and the
-    sequence end is greatest-clamped so the expression stays total if
-    InferFiltersFromGenerate evaluates it on rows the size guard excludes
-    (both CLAUDE.md notes). With ``group_col`` the hashes carry the
-    doc's own group namespace, so each doc scores against ITS group's
-    model."""
-    w = _wframe(docs, id_col, text_col, group_col).where(F.size("w") >= n)
+    explode is :func:`dedup.explode_once`, so the struct array is built
+    once per doc (both CLAUDE.md notes). With ``group_col`` the hashes
+    carry the doc's own group namespace, so each doc scores against ITS
+    group's model."""
+    w = _wframe(docs, id_col, text_col, group_col)
     ns = F.col("g") if group_col is not None else None
-
-    def h(i, k):
-        g = F.concat_ws(" ", F.slice("w", i + 1, k))
-        if ns is not None:
-            g = F.concat_ws(GROUP_SEP, ns, g)
-        return md5_60(g)
-
-    structs = F.transform(
-        F.sequence(F.lit(0), F.greatest(F.size("w") - n, F.lit(0))),
-        lambda i: F.struct(h(i, n).alias("gh"), h(i, n - 1).alias("ph")),
-    )
-    return (
-        w.select("doc_id", structs.alias("gps"))
-        .select("doc_id", F.posexplode("gps").alias("pos", "gp"))
-        .select("doc_id", "pos", F.col("gp.gh").alias("gh"), F.col("gp.ph").alias("ph"))
+    gps = w.select("doc_id", _gram_prefix_array(n, ns).alias("gps"))
+    return explode_once(gps, ["doc_id"], "gps", "gp", pos="pos").select(
+        "doc_id", "pos", F.col("gp.gh").alias("gh"), F.col("gp.ph").alias("ph")
     )
 
 
@@ -187,36 +206,13 @@ def lm_doc_stats(
     # are identical row for row.
     w = _wframe(docs, id_col, text_col, group_col)
     ns = F.col("g") if group_col is not None else None
-
-    def h(i, k):
-        g = F.concat_ws(" ", F.slice("w", i + 1, k))
-        if ns is not None:
-            g = F.concat_ws(GROUP_SEP, ns, g)
-        return md5_60(g)
-
-    structs = F.transform(
-        F.sequence(F.lit(0), F.greatest(F.size("w") - n, F.lit(0))),
-        lambda i: F.struct(h(i, n).alias("gh"), h(i, n - 1).alias("ph")),
-    )
-    # total for any input (the InferFiltersFromGenerate clamp +
-    # empty-array guard, CLAUDE.md round-6 note); docs shorter than n
-    # carry an EMPTY array so explode_outer emits their null-gram row
-    empty = F.slice(
-        F.array(
-            F.struct(
-                F.lit(0).cast("long").alias("gh"),
-                F.lit(0).cast("long").alias("ph"),
-            )
-        ),
-        1,
-        0,
-    )
-    gps = F.when(F.size("w") >= n, structs).otherwise(empty)
+    # docs shorter than n carry an EMPTY array, so explode_outer emits
+    # their null-gram row (an outer generator gets no inferred filter)
     occ = (
         w.select(
             "doc_id",
             F.size("w").cast("long").alias("n_tokens"),
-            gps.alias("gps"),
+            _gram_prefix_array(n, ns).alias("gps"),
         )
         .select("doc_id", "n_tokens", F.explode_outer("gps").alias("gp"))
         .select(

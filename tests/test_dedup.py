@@ -710,3 +710,28 @@ def test_banded_without_corpus_toks_raises(spark):
     )
     with pytest.raises(ValueError, match="corpus_banded without"):
         incremental_minhash_neardup(new, None, corpus_banded=banded)
+
+
+@pytest.mark.parametrize("num_perm,bands", [(30, 8), (64, 10)])
+def test_band_count_not_dividing_num_perm_raises(spark, num_perm, bands):
+    """A ValueError, not an assert: under ``python -O`` num_perm=30,
+    bands=8 would silently band only 24 of the 30 permutations."""
+    from soweego_spark.operators.dedup import band_keys
+
+    toks = spark.createDataFrame(
+        [(1, ["a", "b"])], "doc_id long, tokens array<string>"
+    )
+    signed = minhash_signatures(toks, num_perm=num_perm)
+    with pytest.raises(ValueError, match="divisible by bands"):
+        band_keys(signed, num_perm=num_perm, bands=bands)
+    with pytest.raises(ValueError, match="divisible by bands"):
+        minhash_lsh_candidates(toks, num_perm=num_perm, bands=bands)
+
+
+def test_md5_simhash_over_60_bits_raises(spark):
+    docs = spark.createDataFrame([(1, "a b")], "doc_id long, text string")
+    with pytest.raises(ValueError, match="bits=60"):
+        simhash_signatures(docs, bits=64, hash_family="md5")
+    with pytest.raises(ValueError, match="bits=60"):
+        simhash_pairs(docs, bits=61, hash_family="md5")
+    simhash_signatures(docs, bits=60, hash_family="md5")
