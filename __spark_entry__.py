@@ -612,14 +612,7 @@ def _q_minhash_sql(num_perm: int = 64, bands: int = 16, n: int = 3,
                list_filter(string_split(lower(text), ' '), w -> w <> '') AS w
         FROM documents
     ),
-    toks AS (
-        SELECT doc_id,
-               list_sort(list_distinct(
-                   [array_to_string(w[i:i+{n - 1}], ' ')
-                    FOR i IN range(1, greatest(len(w) - {n}, 0) + 2)]
-               )) AS tokens
-        FROM words
-    ),
+    {_incr_tok_ctes(n)},
     tokh AS (
         SELECT doc_id, {tok_hash} AS h1,
                {tok_hash2} & {PERM_MASK_55} AS h2
@@ -689,12 +682,14 @@ def q_incremental_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _incr_tok_ctes(n: int = 3) -> str:
     """`toks` CTE text: word n-gram shingle sets from an upstream `words`
-    CTE of (doc_id, w: filtered lowercase word list)."""
+    CTE of (doc_id, w: filtered lowercase word list). An empty or null
+    word list has no shingles, as in dedup.shingles."""
     return f"""toks AS MATERIALIZED (
         SELECT doc_id,
-               list_sort(list_distinct(
+               list_sort(list_distinct(CASE WHEN len(w) > 0 THEN
                    [array_to_string(w[i:i+{n - 1}], ' ')
                     FOR i IN range(1, greatest(len(w) - {n}, 0) + 2)]
+                   ELSE []::VARCHAR[] END
                )) AS tokens
         FROM words
     )"""
@@ -940,7 +935,7 @@ def _q_ingest_loop_sql(num_perm: int = 32, bands: int = 8, n: int = 3,
     for k in range(1, n_batches + 1):
         pred = f"doc_id % {n_batches} = {k - 1}"
         p = f"kept_{k - 1}"
-        blocks.append(f"""b{k}_exact AS (
+        blocks.append(f"""b{k}_exact AS MATERIALIZED (
         SELECT doc_id FROM (
             SELECT c.doc_id,
                    row_number() OVER (PARTITION BY c.ck ORDER BY c.doc_id)
@@ -951,30 +946,30 @@ def _q_ingest_loop_sql(num_perm: int = 32, bands: int = 8, n: int = 3,
                                JOIN {p} pk ON s.doc_id = pk.doc_id)
         ) WHERE rn = 1
     ),
-    b{k}_new_banded AS (
+    b{k}_new_banded AS MATERIALIZED (
         SELECT b.* FROM banded b JOIN b{k}_exact USING (doc_id)
     ),
-    b{k}_corpus_banded AS (
+    b{k}_corpus_banded AS MATERIALIZED (
         SELECT b.* FROM banded b JOIN {p} USING (doc_id)
     ),
-    b{k}_corpus_ok AS (
+    b{k}_corpus_ok AS MATERIALIZED (
         SELECT band_id, band_val FROM b{k}_corpus_banded
         GROUP BY band_id, band_val HAVING count(*) <= {cap}
     ),
-    b{k}_corpus_capped AS (
+    b{k}_corpus_capped AS MATERIALIZED (
         SELECT c.doc_id, c.band_id, c.band_val
         FROM b{k}_corpus_banded c JOIN b{k}_corpus_ok
         USING (band_id, band_val)
     ),
-    b{k}_new_ok AS (
+    b{k}_new_ok AS MATERIALIZED (
         SELECT band_id, band_val FROM b{k}_new_banded
         GROUP BY band_id, band_val HAVING count(*) <= {cap}
     ),
-    b{k}_new_capped AS (
+    b{k}_new_capped AS MATERIALIZED (
         SELECT nb.doc_id, nb.band_id, nb.band_val
         FROM b{k}_new_banded nb JOIN b{k}_new_ok USING (band_id, band_val)
     ),
-    b{k}_cand AS (
+    b{k}_cand AS MATERIALIZED (
         SELECT DISTINCT nb.doc_id, c.doc_id AS other_id
         FROM b{k}_new_banded nb JOIN b{k}_corpus_capped c
         USING (band_id, band_val)
@@ -984,14 +979,14 @@ def _q_ingest_loop_sql(num_perm: int = 32, bands: int = 8, n: int = 3,
         USING (band_id, band_val)
         WHERE a.doc_id > bb.doc_id
     ),
-    b{k}_dups AS (
+    b{k}_dups AS MATERIALIZED (
         SELECT DISTINCT cand.doc_id
         FROM b{k}_cand cand
         JOIN toks ta ON ta.doc_id = cand.doc_id
         JOIN toks tb ON tb.doc_id = cand.other_id
         WHERE {_INCR_JACCARD} >= {t}
     ),
-    kept_{k}(doc_id) AS (
+    kept_{k}(doc_id) AS MATERIALIZED (
         SELECT doc_id FROM kept_{k - 1}
         UNION ALL
         SELECT doc_id FROM b{k}_exact
@@ -2340,12 +2335,14 @@ def _part_signature_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _pair_feature_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Brand-blocked pairs over the synthetic signatures, featurized by the
     flagship path (assemble_pairs + compute_features)."""
+    from soweego_spark.operators import pins
     from soweego_spark.operators.pairfeatures import featurize
 
     # the synthetic signature frame feeds four consumers (both blocking
     # sides + both assemble_pairs sides); persist the sample-bounded rows
-    # once instead of rebuilding the map/array columns per consumer (r7)
-    sig = _part_signature_frame(spark, sf_dir).persist()
+    # once instead of rebuilding the map/array columns per consumer (r7).
+    # The pin is left to the caller's scope.
+    sig = pins.persist(_part_signature_frame(spark, sf_dir))
     a = sig.select("block", F.col("url").alias("url_a"), F.col("pk").alias("_pka"))
     b = sig.select("block", F.col("url").alias("url_b"), F.col("pk").alias("_pkb"))
     pairs = (
@@ -2390,16 +2387,17 @@ def q_logistic_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     reference linker/link.py:148-223). Emits the linear margin w·x + b and
     keeps margin >= 0 (== sigmoid >= 0.5): identical decision boundary,
     bit-exact across engines (no libm exp in the output)."""
+    from soweego_spark.operators import pins
     from soweego_spark.operators.classify import train_logistic
     from soweego_spark.operators.dedup import md5_60
     from soweego_spark.operators.pairfeatures import FEATURE_COLUMNS
 
-    # cache: the feature frame feeds BOTH the training collect and the
-    # returned scoring plan — same shape as plans/pipeline.py's cached
+    # pinned: the feature frame feeds BOTH the training collect and the
+    # returned scoring plan — same shape as plans/pipeline.py's pinned
     # feature stage (recomputing featurize was ~12 s of this query's
-    # 21 s at sf0.1); session-scoped, the gate/bench sessions are
-    # one-shot
-    feats = _pair_feature_frame(spark, sf_dir).cache()
+    # 21 s at sf0.1); the returned plan reads the pin, so the gate's
+    # per-query scope releases it
+    feats = pins.persist(_pair_feature_frame(spark, sf_dir))
     labeled = (
         _labeled_feature_subset(feats)
         .select("url_a", "url_b", *FEATURE_COLUMNS, "label")

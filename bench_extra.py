@@ -59,6 +59,7 @@ def _spark():
 
 def warm(names: list[str]) -> None:
     import __spark_entry__ as entry
+    from soweego_spark.operators import pins
 
     spark = _spark()
     qs = entry.queries()
@@ -68,11 +69,14 @@ def warm(names: list[str]) -> None:
         for _ in range(RUNS):
             spark.catalog.clearCache()
             spark.sparkContext.setJobDescription(f"bench_extra:{name}")
-            t0 = time.time()
-            qs[name](spark, SF_DIR).write.format("noop").mode(
-                "overwrite"
-            ).save()
-            runs.append(round(time.time() - t0, 3))
+            # clearCache does not drop localCheckpoints: without the scope
+            # run k's would still be pinned during run k+1
+            with pins.scope():
+                t0 = time.time()
+                qs[name](spark, SF_DIR).write.format("noop").mode(
+                    "overwrite"
+                ).save()
+                runs.append(round(time.time() - t0, 3))
         out[name] = runs
         print(f"{name}: runs={runs} min={min(runs)}", flush=True)
     print("JSON " + json.dumps(out))
@@ -84,16 +88,24 @@ sys.path.insert(0, {root!r})
 os.environ.setdefault("SPARK_GRAFT_SF_DIR", {sf!r})
 import __spark_entry__ as entry
 from soweego_spark.session import get_spark
+try:
+    from soweego_spark.operators.pins import scope
+except ImportError:  # a checkout from before the pins module
+    from contextlib import nullcontext as scope
 spark = get_spark(cpus={cpus}, app_name="bench-extra-fresh",
                   shuffle_partitions={parts})
 spark.sparkContext.setLogLevel("ERROR")
 qs = entry.queries()
-# warm-up run (JVM/codegen), then the measured run — house protocol
-qs[{name!r}](spark, {sf!r}).write.format("noop").mode("overwrite").save()
+# warm-up run (JVM/codegen), then the measured run — house protocol; one
+# pin scope per run, so the warm-up's localCheckpoints are gone too
+with scope():
+    qs[{name!r}](spark, {sf!r}).write.format("noop").mode("overwrite").save()
 spark.catalog.clearCache()
-t0 = time.time()
-qs[{name!r}](spark, {sf!r}).write.format("noop").mode("overwrite").save()
-print("RESULT " + json.dumps({{"secs": round(time.time() - t0, 3)}}))
+with scope():
+    t0 = time.time()
+    qs[{name!r}](spark, {sf!r}).write.format("noop").mode("overwrite").save()
+    secs = round(time.time() - t0, 3)
+print("RESULT " + json.dumps({{"secs": secs}}))
 spark.stop()
 """
 

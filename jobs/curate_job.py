@@ -70,6 +70,7 @@ def main() -> None:
         .getOrCreate()
     )
 
+    from soweego_spark.operators import pins
     from soweego_spark.plans.curate import (
         CurateConfig,
         load_stage,
@@ -101,15 +102,16 @@ def main() -> None:
         def bench_thunk():  # noqa: F811 — intentional rebind
             return spark.read.parquet(args.bench).select("doc_id", "text")
 
-    res = run_curate(
-        spark, args.state, docs_thunk, cfg,
-        bench_thunk=bench_thunk, max_stages=args.max_stages,
-    )
+    with pins.scope():
+        res = run_curate(
+            spark, args.state, docs_thunk, cfg,
+            bench_thunk=bench_thunk, max_stages=args.max_stages,
+        )
 
-    if args.output and any(s["stage"] == "pack" for s in res["stages"]):
-        load_stage(spark, args.state, "pack").write.mode(
-            "overwrite"
-        ).parquet(args.output)
+        if args.output and any(s["stage"] == "pack" for s in res["stages"]):
+            load_stage(spark, args.state, "pack").write.mode(
+                "overwrite"
+            ).parquet(args.output)
 
     print(json.dumps({"metric": "curate_pipeline", **res}))
     spark.stop()

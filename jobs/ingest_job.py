@@ -68,6 +68,7 @@ def main() -> None:
         .getOrCreate()
     )
 
+    from soweego_spark.operators import pins
     from soweego_spark.plans.ingest_loop import (
         IngestConfig,
         run_ingest_loop,
@@ -94,21 +95,22 @@ def main() -> None:
         compact_every=args.compact_every,
         band_buckets=args.band_buckets,
     )
-    res = run_ingest_loop(
-        spark, args.state, batches, cfg, max_batches=args.max_batches
-    )
+    with pins.scope():
+        res = run_ingest_loop(
+            spark, args.state, batches, cfg, max_batches=args.max_batches
+        )
 
-    if args.output and (args.max_batches is None
-                        or args.max_batches >= len(batches)):
-        from soweego_spark.plans.checkpoint import StageCheckpointer
+        if args.output and (args.max_batches is None
+                            or args.max_batches >= len(batches)):
+            from soweego_spark.plans.checkpoint import StageCheckpointer
 
-        ckpt = StageCheckpointer(args.state, spark)
-        kept = None
-        for i in range(1, len(batches) + 1):
-            mf = ckpt.manifest(f"kept_b{i}")
-            part = ckpt.load(f"kept_b{i}", mf["config_hash"])
-            kept = part if kept is None else kept.unionByName(part)
-        kept.write.mode("overwrite").parquet(args.output)
+            ckpt = StageCheckpointer(args.state, spark)
+            kept = None
+            for i in range(1, len(batches) + 1):
+                mf = ckpt.manifest(f"kept_b{i}")
+                part = ckpt.load(f"kept_b{i}", mf["config_hash"])
+                kept = part if kept is None else kept.unionByName(part)
+            kept.write.mode("overwrite").parquet(args.output)
 
     print(json.dumps({"metric": "ingest_loop", **res.as_dict()}))
     spark.stop()

@@ -54,6 +54,7 @@ def main() -> None:
         .getOrCreate()
     )
 
+    from soweego_spark.operators import pins
     from soweego_spark.plans.checkpoint import StageCheckpointer
     from soweego_spark.plans.pipeline import PipelineConfig, run_pipeline
     from soweego_spark.sources.readers import write_links_csv
@@ -98,11 +99,12 @@ def main() -> None:
         classifier=args.classifier,
         occupation_closure=closure,
     )
-    res = run_pipeline(spark, pages, labeled, cfg, checkpointer=ck)
+    with pins.scope():
+        res = run_pipeline(spark, pages, labeled, cfg, checkpointer=ck)
 
-    res.matches.write.mode("overwrite").parquet(f"{args.output}/matches")
-    res.clusters.write.mode("overwrite").parquet(f"{args.output}/clusters")
-    write_links_csv(res.matches, f"{args.output}/links_csv")
+        res.matches.write.mode("overwrite").parquet(f"{args.output}/matches")
+        res.clusters.write.mode("overwrite").parquet(f"{args.output}/clusters")
+        write_links_csv(res.matches, f"{args.output}/links_csv")
 
     print("METRICS " + json.dumps(res.metrics), file=sys.stderr)
     print(json.dumps({"status": "ok", "metrics": res.metrics}))

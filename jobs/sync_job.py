@@ -180,6 +180,7 @@ def main() -> None:
     # 3. deprecation candidates from the link check become a
     #    delete/deprecate plan,
     # 4. both plans stream to payload files (the exact upload batches).
+    from soweego_spark.operators import pins
     from soweego_spark.operators.ingest import (
         plan_claim_additions,
         plan_identifier_actions,
@@ -188,64 +189,65 @@ def main() -> None:
     from soweego_spark.sources.remote import emit_statements, jsonl_dir_emitter
 
     CATALOG_PID = "P1953"  # the catalog's identifier property
-    # cache: extras/additions each feed a parquet write, the payload
-    # emitter, AND a stats count — without a persist the injected QID
-    # resolver (a remote API in production) would re-fire per consumer
-    extras = resolve_unmatched_claims(t_claims, bio_claims).cache()
-    proposed = extras.select(
-        F.concat(F.lit("Q"), F.col("tid").cast("string")).alias("qid"),
-        "pid",
-        F.col("t_qid").alias("value"),
-        F.col("tid").cast("string").alias("catalog_id"),
-    )
-    existing = wd_claims.select(
-        F.concat(F.lit("Q"), F.col("tid").cast("string")).alias("qid"),
-        "pid",
-        F.explode("values").alias("value"),
-    )
-    additions = plan_claim_additions(
-        proposed,
-        existing,
-        heuristic="Q1266546",
-        retrieved="2026-08-16",
-        catalog_qid="Q14005",
-        catalog_pid=CATALOG_PID,
-    ).cache()
-    ident_claims = wd.select(
-        F.concat(F.lit("Q"), F.col("tid").cast("string")).alias("qid"),
-        F.lit(CATALOG_PID).alias("pid"),
-        F.col("tid").cast("string").alias("value"),
-    )
-    deprecations = plan_identifier_actions(
-        links.filter("deprecate").select(
+    with pins.scope():
+        # pinned: extras/additions each feed a parquet write, the payload
+        # emitter, AND a stats count — without a persist the injected QID
+        # resolver (a remote API in production) would re-fire per consumer
+        extras = pins.persist(resolve_unmatched_claims(t_claims, bio_claims))
+        proposed = extras.select(
             F.concat(F.lit("Q"), F.col("tid").cast("string")).alias("qid"),
-            F.col("tid").cast("string").alias("tid"),
-        ),
-        ident_claims,
-        catalog_pid=CATALOG_PID,
-        action="deprecate",
-    )
-    additions.write.mode("overwrite").parquet(f"{args.output}/additions_plan")
-    deprecations.write.mode("overwrite").parquet(
-        f"{args.output}/deprecations_plan"
-    )
-    emit_statements(
-        additions.select(
-            "qid", "pid", "value", "action", "ref_target_pid", "references"
-        ),
-        jsonl_dir_emitter(f"{args.output}/payloads"),
-    )
+            "pid",
+            F.col("t_qid").alias("value"),
+            F.col("tid").cast("string").alias("catalog_id"),
+        )
+        existing = wd_claims.select(
+            F.concat(F.lit("Q"), F.col("tid").cast("string")).alias("qid"),
+            "pid",
+            F.explode("values").alias("value"),
+        )
+        additions = pins.persist(plan_claim_additions(
+            proposed,
+            existing,
+            heuristic="Q1266546",
+            retrieved="2026-08-16",
+            catalog_qid="Q14005",
+            catalog_pid=CATALOG_PID,
+        ))
+        ident_claims = wd.select(
+            F.concat(F.lit("Q"), F.col("tid").cast("string")).alias("qid"),
+            F.lit(CATALOG_PID).alias("pid"),
+            F.col("tid").cast("string").alias("value"),
+        )
+        deprecations = plan_identifier_actions(
+            links.filter("deprecate").select(
+                F.concat(F.lit("Q"), F.col("tid").cast("string")).alias("qid"),
+                F.col("tid").cast("string").alias("tid"),
+            ),
+            ident_claims,
+            catalog_pid=CATALOG_PID,
+            action="deprecate",
+        )
+        additions.write.mode("overwrite").parquet(f"{args.output}/additions_plan")
+        deprecations.write.mode("overwrite").parquet(
+            f"{args.output}/deprecations_plan"
+        )
+        emit_statements(
+            additions.select(
+                "qid", "pid", "value", "action", "ref_target_pid", "references"
+            ),
+            jsonl_dir_emitter(f"{args.output}/payloads"),
+        )
 
-    stats = {
-        "links": links.count(),
-        "deprecate": links.filter("deprecate").count(),
-        "dead_ids": dead.count(),
-        "bio_date_matches": bio_dates.count(),
-        "bio_claim_matches": bio_claims.count(),
-        "resolved_extras": extras.count(),
-        "planned_additions": additions.count(),
-        "planned_deprecations": deprecations.count(),
-    }
+        stats = {
+            "links": links.count(),
+            "deprecate": links.filter("deprecate").count(),
+            "dead_ids": dead.count(),
+            "bio_date_matches": bio_dates.count(),
+            "bio_claim_matches": bio_claims.count(),
+            "resolved_extras": extras.count(),
+            "planned_additions": additions.count(),
+            "planned_deprecations": deprecations.count(),
+        }
     print("STATS " + json.dumps(stats), file=sys.stderr)
     print(json.dumps({"status": "ok", "stats": stats}))
     spark.stop()

@@ -9,13 +9,16 @@ differs on equal values, so local green must include type parity)."""
 from __future__ import annotations
 
 import hashlib
+import os
 import sys
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+# this checkout's root, so a second checkout (an A/B) checks its own code
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entry_mod  # noqa: E402
+from soweego_spark.operators import pins  # noqa: E402
 from soweego_spark.session import get_spark  # noqa: E402
 
 SF_DIR = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
@@ -87,8 +90,6 @@ def frame_hash(cols, rows):
 
 
 def main():
-    import os
-
     # data-dependent oracle generators (embedding_ivf_topk replays its
     # k-means fit on the parquet under test) key off this; the driver's
     # gate runs at the default sf0.01
@@ -105,8 +106,9 @@ def main():
     for name, fn in qs.items():
         if ONLY and name not in ONLY:
             continue
-        df = fn(spark, SF_DIR)
-        pdf = df.toPandas()
+        with pins.scope():  # one query's pins never outlive it
+            df = fn(spark, SF_DIR)
+            pdf = df.toPandas()
         s_cols = list(pdf.columns)
         s_rows = [tuple(r) for r in pdf.itertuples(index=False)]
         if name not in oracles:

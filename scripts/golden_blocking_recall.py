@@ -19,6 +19,7 @@ sys.path.insert(0, __file__.rsplit("/", 2)[0])
 
 from pyspark.sql import functions as F
 
+from soweego_spark.operators import pins
 from soweego_spark.plans import golden
 from soweego_spark.session import get_spark
 
@@ -30,10 +31,12 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     out = {}
     for prof in golden.PROFESSIONS:
-        wd = golden.preprocess_wikidata_golden(
+        wd = pins.persist(golden.preprocess_wikidata_golden(
             golden.read_wikidata_set(spark, golden.SAMPLES_DIR, prof)
-        ).cache()
-        tgt = golden.golden_target(spark, golden.SAMPLES_DIR, prof).cache()
+        ))
+        tgt = pins.persist(
+            golden.golden_target(spark, golden.SAMPLES_DIR, prof)
+        )
         pos = wd.filter(F.col("tid_positive").isNotNull()).select(
             "qid", F.col("tid_positive").alias("tid")
         )
@@ -71,8 +74,8 @@ def main() -> None:
             "recall": round(n_ret / n_pos, 4),
             "recall_of_present": round(n_ret / max(n_present, 1), 4),
         }
-        wd.unpersist()
-        tgt.unpersist()
+        pins.release(wd)
+        pins.release(tgt)
         print(prof, json.dumps(out[prof]), flush=True)
     print(json.dumps({"top_k": top_k, "professions": out}))
     spark.stop()

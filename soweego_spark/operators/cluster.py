@@ -19,20 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-
-def _unpersist_checkpoint(df: DataFrame) -> None:
-    """Release the RDD a ``localCheckpoint()`` pinned.
-
-    ``localCheckpoint`` PERSISTS its internal RDD and ``df.rdd.unpersist()``
-    does NOT release it (that is a derived deserialization RDD, verified).
-    The persisted one is the checkpointed plan's ``LogicalRDD.rdd``; going
-    through the JVM plan is the only handle PySpark exposes. Best-effort:
-    if the plan shape ever changes, fall back to GC/ContextCleaner.
-    """
-    try:
-        df._jdf.queryExecution().analyzed().rdd().unpersist(False)
-    except Exception:
-        pass
+from soweego_spark.operators import pins
 
 
 def _large_star(edges: DataFrame) -> DataFrame:
@@ -90,7 +77,6 @@ def connected_components(
     src: str = "url_a",
     dst: str = "url_b",
     max_iterations: int = 20,
-    release_checkpoint: bool = False,
     single_task_edges: int = 1_000_000,
 ) -> DataFrame:
     """Edge list -> (url, cluster_id) with cluster_id = min url in component.
@@ -108,14 +94,9 @@ def connected_components(
     already counts the edges, so the routing costs no extra job. Set 0
     to force the iterative path (scale proofs, tests).
 
-    The convergence loop unpersists each iteration's localCheckpoint, but
-    the FINAL converged edge set stays pinned because the lazy result
-    depends on it. ``release_checkpoint=True`` materializes the (node,
-    cluster) result as its own eager localCheckpoint and releases the
-    converged edges immediately — use it from per-batch loops (e.g.
-    incremental dedup) where one pinned edge set per call would
-    accumulate; release the returned frame itself with
-    ``_unpersist_checkpoint`` once consumed.
+    The convergence loop releases each iteration's localCheckpoint once
+    the next one has materialized; the last edge set, which the lazy
+    result reads, belongs to the caller's ``pins.scope()``.
     """
     e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).filter(
         F.col("src") != F.col("dst")
@@ -127,7 +108,7 @@ def connected_components(
     # wall is driver-round LATENCY, not data, so halving jobs/iteration
     # halves the operator's fixed floor (round-6; jobs/round is
     # regression-asserted via statusTracker in tests/test_cluster.py).
-    e = e.localCheckpoint(eager=False)
+    e = pins.checkpoint(e, eager=False)
 
     def _fingerprint(df):
         # Order-insensitive edge-set fingerprint: count + hash sum. ONE
@@ -142,32 +123,21 @@ def connected_components(
     fp = _fingerprint(e)
 
     if 0 < fp[0] <= single_task_edges:
-        out = _union_find_single_task(e)
-        if release_checkpoint:
-            out = out.localCheckpoint()
-            _unpersist_checkpoint(e)
-        return out
+        return _union_find_single_task(e)
     for _ in range(max_iterations):
         prev = e
-        e = _small_star(_large_star(e)).localCheckpoint(eager=False)
+        e = pins.checkpoint(_small_star(_large_star(e)), eager=False)
         fp_new = _fingerprint(e)  # materializes e's checkpoint + probes
-        # Without an explicit unpersist every iteration's edge set stays
-        # pinned in executor memory until GC/ContextCleaner happens to run
-        # — nondeterministic pressure on long chains at scale. The
-        # fingerprint action above has already materialized the new
-        # checkpoint, so dropping the previous one is safe.
-        _unpersist_checkpoint(prev)
+        # the fingerprint action above has materialized the new
+        # checkpoint, so the previous one can go now, not at scope end
+        pins.release(prev)
         if fp_new == fp:
             break
         fp = fp_new
     # After convergence every edge points node -> component min (a star).
     members = e.select(F.col("src").alias("url"), F.col("dst").alias("cluster_id"))
     roots = e.select(F.col("dst").alias("url"), F.col("dst").alias("cluster_id"))
-    out = members.unionByName(roots).distinct()
-    if release_checkpoint:
-        out = out.localCheckpoint()  # eager: materializes before the release
-        _unpersist_checkpoint(e)
-    return out
+    return members.unionByName(roots).distinct()
 
 
 def _union_find_single_task(e: DataFrame) -> DataFrame:

@@ -30,6 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from soweego_spark.operators import pins
 from soweego_spark.operators.dedup import explode_once, md5_60
 
 TWO_60 = float(1 << 60)
@@ -104,7 +105,7 @@ def duplicated_spans(
     # uncached, the scan + k-word concat + md5 per gram ran twice (r7
     # plan audit). The rows are three fixed-width columns (~24 B/gram),
     # far cheaper to persist than to re-hash; within-query reuse only.
-    grams = gram_occurrences(docs, k, id_col, text_col).persist()
+    grams = pins.persist(gram_occurrences(docs, k, id_col, text_col))
     counts = grams.groupBy("gh").agg(F.count("*").alias("c"))
     dup = counts.where(F.col("c") >= min_count)
     if max_count is not None:
@@ -191,7 +192,7 @@ def duplicated_spans_incremental(
     """
     # same two-consumer reuse as duplicated_spans: persist the batch's
     # narrow gram rows instead of re-hashing them for the join back (r7)
-    grams = gram_occurrences(new_docs, k, id_col, text_col).persist()
+    grams = pins.persist(gram_occurrences(new_docs, k, id_col, text_col))
     own = grams.groupBy("gh").agg(F.count("*").alias("own_c"))
     total = (
         own.join(corpus_counts.select("gh", "c"), "gh", "left")

@@ -36,6 +36,8 @@ import hashlib
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from soweego_spark.operators import pins
+
 DEFAULT_NUM_PERM = 64
 DEFAULT_BANDS = 16
 
@@ -152,6 +154,9 @@ def shingles(
         F.sequence(F.lit(0), F.greatest(F.size("w") - n, F.lit(0))),
         lambda i: F.concat_ws(" ", F.slice("w", i + 1, n)),
     )
+    # no words, no shingles: the clamped offsets [0] would give the token
+    # "", so every empty doc the same signature (Jaccard-1 near-dups)
+    sh = F.when(F.size("w") > 0, sh).otherwise(F.array().cast("array<string>"))
     return docs.select(
         "doc_id", F.array_sort(F.array_distinct(sh)).alias("tokens")
     )
@@ -416,10 +421,10 @@ def simhash_pairs(
     # audit: 3 scans / 6 Exchanges of the signature subtree). Persisting
     # the tiny signature frame collapses that to one pass; same
     # within-query-only rationale as minhash_lsh_candidates.
-    sig = simhash_signatures(
+    sig = pins.persist(simhash_signatures(
         docs, id_col=id_col, text_col=text_col, bits=bits,
         hash_family=hash_family,
-    ).persist()
+    ))
 
     # Block i covers bit range [lo_i, lo_i + width_i); widths differ by at
     # most 1 so all 64 bits are covered.
@@ -573,10 +578,10 @@ def fingerprint_neardup(
     # persist the narrow (doc_id, fingerprint) rows once instead of
     # re-running the k-gram + window-min transform per consumer (r7;
     # same within-query rationale as minhash_lsh_candidates)
-    fp = winnowing_fingerprints(
+    fp = pins.persist(winnowing_fingerprints(
         docs, id_col=id_col, text_col=text_col, k=k, window=window,
         hash_family=hash_family,
-    ).persist()
+    ))
     counts = fp.groupBy("fingerprint").agg(F.count("*").alias("df"))
     hot = counts.filter(F.col("df") > max_df).select("fingerprint")
     fp = fp.join(F.broadcast(hot), "fingerprint", "left_anti")
@@ -704,6 +709,9 @@ def incremental_minhash_neardup(
 
     Same precision doctrine as minhash_lsh_candidates: banding only
     nominates, the exact-Jaccard confirm decides — no false drops.
+
+    In exact mode the result reads a few id-only checkpoints; they belong
+    to the caller's ``pins.scope()`` (a per-batch stage closes one).
     """
     mode = {True: "conservative", False: None}.get(within_batch, within_batch)
     if mode not in (None, "conservative", "exact"):
@@ -721,18 +729,11 @@ def incremental_minhash_neardup(
     # execution, and AQE's runtime exchange reuse already deduplicates
     # the identical signature/band subtrees there (persisting + eagerly
     # checkpointing that path measured a 1.6x LOSS at sf0.1). EXACT mode
-    # spans several eager actions (corpus confirm, edge checkpoint, the
-    # final join), across which exchange reuse cannot apply — there the
-    # batch band table (three fixed-width columns, batch-bounded) is
-    # persisted and released before return. Token frames are never
-    # persisted: serializing wide token arrays into cache blocks costs
-    # more than recomputing them (the r3 lesson), and the corpus side
-    # must always stream (it grows forever).
-    released: list[DataFrame] = []
-
-    def _release_all() -> None:
-        for df in released:
-            df.unpersist()
+    # spans several eager actions, across which exchange reuse cannot
+    # apply — there the batch band table (three fixed-width columns) is
+    # pinned until both confirms are checkpointed. Token frames are never
+    # pinned: serializing wide token arrays costs more than recomputing
+    # them (the r3 lesson), and the corpus side grows forever.
 
     # corpus_toks=None — the explicit no-corpus contract (self-dedup
     # compositions, e.g. the curate near-dup stage or an ingest loop's
@@ -775,8 +776,7 @@ def incremental_minhash_neardup(
     if mode == "exact":
         # exact mode consumes new_banded from two separate eager actions
         # (the corpus probe and the in-batch edge build)
-        new_banded = new_banded.persist()
-        released.append(new_banded)
+        new_banded = pins.persist(new_banded)
     if not corpus_empty:
         cand = (
             new_banded.join(
@@ -864,14 +864,14 @@ def incremental_minhash_neardup(
         # no corpus: no unconditional drops, no edge filtering — the
         # greedy pass over the in-batch graph is the whole answer
         corpus_dropped = None
-        edges = edges_raw.localCheckpoint()
+        edges = pins.checkpoint(edges_raw)
     else:
         from concurrent.futures import ThreadPoolExecutor
 
         cd_frame = confirm(cand, corpus_toks).select("doc_id").distinct()
         with ThreadPoolExecutor(max_workers=2) as pool:
-            f_cd = pool.submit(cd_frame.localCheckpoint)
-            f_er = pool.submit(edges_raw.localCheckpoint)
+            f_cd = pool.submit(pins.checkpoint, cd_frame)
+            f_er = pool.submit(pins.checkpoint, edges_raw)
             corpus_dropped = f_cd.result()
             edges_raw = f_er.result()
         # id-only join of two materialized checkpoints — cheap to
@@ -881,6 +881,8 @@ def incremental_minhash_neardup(
             "other_id",
             "left_anti",
         )
+    # both confirms are materialized: nothing reads the band table again
+    pins.release(new_banded)
     greedy = _greedy_component_drops(
         edges, max_component_edges=max_component_edges
     )
@@ -888,12 +890,9 @@ def incremental_minhash_neardup(
         greedy if corpus_dropped is None
         else corpus_dropped.unionByName(greedy).distinct()
     )
-    # every heavy reuse is materialized (corpus_dropped/edges are
-    # checkpointed; the greedy join path checkpoints its own output) —
-    # release the within-call persists; the final anti join re-derives
-    # new_toks once from lineage. The anti join ignores duplicate dup_ids
-    # rows, so no distinct is needed in the corpus-empty branch.
-    _release_all()
+    # The final anti join re-derives new_toks once from lineage and
+    # ignores duplicate dup_ids rows (no distinct in the corpus-empty
+    # branch).
     return new_toks.join(dup_ids, "doc_id", "left_anti")
 
 
@@ -925,12 +924,12 @@ def _greedy_component_drops(
       correct but pays one bounded shuffle round per greedy wavefront
       step (inherent: lex-first MIS is P-complete).
 
-    Checkpoint hygiene for per-batch ingestion loops: the CC call runs
-    with ``release_checkpoint=True`` so its converged edge set is released
-    immediately; what stays pinned per exact-mode call is a handful of
-    ID-ONLY tables (confirmed edges, corpus-dropped ids, the (node,
-    cluster) map) until GC — bounded by dup counts, never by batch or
-    corpus text volume (regression-tested in
+    Checkpoint hygiene for per-batch ingestion loops: what stays pinned
+    per exact-mode call is a handful of ID-ONLY tables (confirmed edges,
+    corpus-dropped ids, the CC pass's converged edge set) — bounded by
+    dup counts, never by batch or corpus text volume — and all of them
+    belong to the caller's ``pins.scope()``, which drops them when the
+    batch's stage is written (regression-tested in
     test_dedup.py::test_exact_mode_bounds_pinned_checkpoints)."""
     import pandas as pd
 
@@ -975,9 +974,7 @@ def _greedy_component_drops(
     # present); either way the count probe is one cheap job.
     n_edges = edges.count()
     if n_edges == 0:
-        return edges.sparkSession.createDataFrame(
-            [], StructType([StructField("doc_id", id_type)])
-        )
+        return edges.select("doc_id")  # empty; reads the caller's pins
     if n_edges <= max_component_edges:
         return (
             edges.select(
@@ -991,9 +988,7 @@ def _greedy_component_drops(
                 schema=StructType([StructField("doc_id", id_type)]),
             )
         )
-    comp = connected_components(
-        edges, src="doc_id", dst="other_id", release_checkpoint=True
-    )
+    comp = connected_components(edges, src="doc_id", dst="other_id")
     ec = edges.join(
         comp.select(F.col("url").alias("doc_id"), "cluster_id"), "doc_id"
     ).select(
@@ -1045,28 +1040,18 @@ def _greedy_drops_joins(edges: DataFrame) -> DataFrame:
     after the new one materializes, so lineage, storage, and job count
     stay flat however many rounds run; on exit the drop set is eagerly
     checkpointed (one tiny id-only job) and the final state + input edges
-    are RELEASED — per-batch ingestion loops accumulate only the returned
-    id-only frame per call (regression-tested in
+    are RELEASED — only the returned id-only frame stays pinned, for the
+    caller's ``pins.scope()`` (regression-tested in
     test_exact_mode_bounds_pinned_checkpoints, joins path included).
     """
-    from pyspark.sql.types import StructField, StructType
-
-    from soweego_spark.operators.cluster import _unpersist_checkpoint
-
-    edges = edges.select("a", "b")
     # lazy checkpoint + count = ONE job that both pins the edges and
     # returns the edge count (replaces isEmpty probe + eager checkpoint)
-    edges = edges.localCheckpoint(eager=False)
+    edges = pins.checkpoint(edges.select("a", "b"), eager=False)
     n_edges = edges.count()
     if n_edges == 0:
-        # common hybrid case: no over-cap components — release the pin
-        # the count created and return a fresh empty typed frame (never a
-        # frame derived from an unpersisted checkpoint: recomputing one
-        # throws once its blocks are gone)
-        _unpersist_checkpoint(edges)
-        return edges.sparkSession.createDataFrame(
-            [], StructType([StructField("doc_id", edges.schema["a"].dataType)])
-        )
+        # common hybrid case: no over-cap components. The empty result
+        # reads the pin, which the caller's scope releases.
+        return edges.select(F.col("a").alias("doc_id"))
     null_b = F.lit(None).cast(edges.schema["b"].dataType).alias("b")
     # state rows: (a, b) = remaining edge; (v, NULL) = dropped vertex
     state = edges
@@ -1098,26 +1083,27 @@ def _greedy_drops_joins(edges: DataFrame) -> DataFrame:
             .join(decided.withColumnRenamed("v", "b"), "b", "left_anti")
             .select("a", "b")
         )
-        state = (
+        state = pins.checkpoint(
             nxt.unionByName(
                 state.filter(F.col("b").isNull()).select("a", "b")
-            )
-            .unionByName(dropped.select(F.col("v").alias("a"), null_b))
-            .localCheckpoint(eager=False)
+            ).unionByName(dropped.select(F.col("v").alias("a"), null_b)),
+            eager=False,
         )
         # the round's single job: materializes the new state's checkpoint
         # AND returns the remaining-edge count that decides termination
         n_edges = state.filter(F.col("b").isNotNull()).count()
-        _unpersist_checkpoint(prev)
+        pins.release(prev)
         prev = state
     # loop exits with 0 edges left: the state is exactly the NULL-marked
     # drop set. Pin it as its own tiny id-only checkpoint and release the
     # final round's state (the loop already released the input edges and
     # every intermediate round when the following round materialized).
-    out = state.filter(F.col("b").isNull()).select(
-        F.col("a").alias("doc_id")
-    ).distinct().localCheckpoint()
-    _unpersist_checkpoint(state)
+    out = pins.checkpoint(
+        state.filter(F.col("b").isNull())
+        .select(F.col("a").alias("doc_id"))
+        .distinct()
+    )
+    pins.release(state)
     # diagnostics only (scripts/greedy_scale_proof.py reads it): rounds
     # == longest greedy dependency chain in the input
     global LAST_JOINS_ROUNDS

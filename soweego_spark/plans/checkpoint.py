@@ -21,6 +21,8 @@ from pathlib import Path
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from soweego_spark.operators import pins
+
 MANIFEST_NAME = "_stage_manifest.json"
 
 
@@ -230,13 +232,15 @@ class StageCheckpointer:
     def stage(self, name: str, config: dict, compute) -> DataFrame:
         """Memoized stage: load when the manifest matches, else compute+save.
 
-        ``compute`` is a thunk returning the stage DataFrame.
+        ``compute`` is a thunk returning the stage DataFrame; what it pins
+        is released once the write is done (the stage returns the parquet).
         """
         h = config_hash(config)
         cached = self.load(name, h)
         if cached is not None:
             return cached
-        return self.save(name, compute(), h)
+        with pins.scope():
+            return self.save(name, compute(), h)
 
     def manifest(self, stage: str) -> dict | None:
         _, mf = self._paths(stage)

@@ -52,6 +52,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from soweego_spark.operators import pins
 from soweego_spark.plans.checkpoint import StageCheckpointer, config_hash
 
 
@@ -137,10 +138,6 @@ def run_curate(
     result: dict = {"stages": []}
     t_start = time.time()
     n_stages = 0
-    # id-only frames a stage's compute materializes for within-stage reuse
-    # (e.g. the gopher keep list below); released as soon as the stage's
-    # parquet is written so nothing stays pinned across stages (r7)
-    to_release: list[DataFrame] = []
 
     def stage(name: str, compute) -> DataFrame | None:
         nonlocal chain, n_stages
@@ -150,11 +147,6 @@ def run_curate(
         chain = config_hash(stage_cfg)
         out = ckpt.stage(name, stage_cfg, compute)
         n_stages += 1
-        from soweego_spark.operators.cluster import _unpersist_checkpoint
-
-        for df in to_release:
-            _unpersist_checkpoint(df)
-        to_release.clear()
         # the manifest already carries the persisted row count — reading
         # it back avoids one count job per stage (3 -> 2 actions/stage)
         mf = ckpt.manifest(name)
@@ -173,13 +165,12 @@ def run_curate(
             # (model slice, scoring scan, final semi join) and each
             # consumer re-ran the whole gopher bigram shuffle from
             # scratch — the dominant cost of the quality stage at sf0.1
-            # (r7 stage diagnostic; released by stage() after the write)
+            # (r7 stage diagnostic; released with the stage's pin scope)
             passed = gopher_quality(docs).where("quality_pass").select(
                 F.col("id").alias("doc_id")
             )
             if cfg.lm:
-                passed = passed.localCheckpoint()
-                to_release.append(passed)
+                passed = pins.checkpoint(passed)
             docs = docs.join(passed, "doc_id", "left_semi")
         if cfg.lm:
             docs = _lm_keep(docs, cfg)

@@ -66,6 +66,7 @@ from pyspark.sql.types import (
 from soweego_spark.functions import dates, simkernels
 from soweego_spark.functions.text import normalize_values, tokenize_values
 from soweego_spark.operators import classify as clf
+from soweego_spark.operators import pins
 from soweego_spark.operators.pairfeatures import (
     FEATURE_MISSING_VALUE,
     _date_sim_expr,
@@ -507,38 +508,21 @@ def build_golden_training_set(
     (1 iff the target id is the Wikidata-declared one for that QID).
     Positives the blocker misses are absent, like the reference's
     (train.py:219-225; its evaluation scores positives ∩ dataset only).
+
+    The pinned wd/tgt frames belong to the caller's ``pins.scope()``:
+    close it after collecting, or 5 professions hold ~10 frames.
     """
-    ds, _ = _golden_training_set_cached(
-        spark, profession, samples_dir, top_k, include_jw
-    )
-    return ds
-
-
-def _golden_training_set_cached(
-    spark: SparkSession,
-    profession: str,
-    samples_dir: str,
-    top_k: int,
-    include_jw: bool = False,
-) -> tuple[DataFrame, list[DataFrame]]:
-    """build_golden_training_set plus the cached wd/tgt frames so a
-    collecting caller can unpersist them afterwards (the collect is the
-    only consumer in the link/evaluate flows; without the release a
-    bench run evaluating 5 professions accumulates ~10 cached frames)."""
-    wd = preprocess_wikidata_golden(
+    wd = pins.persist(preprocess_wikidata_golden(
         read_wikidata_set(spark, samples_dir, profession)
-    )
-    wd.cache()
-    tgt = golden_target(spark, samples_dir, profession)
-    tgt.cache()
+    ))
+    tgt = pins.persist(golden_target(spark, samples_dir, profession))
     pairs = block_golden(wd, tgt, top_k=top_k)
     feats = golden_features(pairs, wd, tgt, include_jw=include_jw)
     labels = wd.select("qid", F.col("tid_positive"))
-    ds = feats.join(labels, "qid", "left").withColumn(
+    return feats.join(labels, "qid", "left").withColumn(
         "label",
         (F.col("tid") == F.col("tid_positive")).cast("int")
     ).fillna(0, subset=["label"]).drop("tid_positive")
-    return ds, [wd, tgt]
 
 
 def link_golden(
@@ -568,26 +552,22 @@ def link_golden(
     blocker's same-name candidates IS the behavior under test there.
     ``goal='training'`` links items whose truth is present (in-sample,
     so a flow check, not a generalization score).
+
+    The returned predictions are a checkpoint in the caller's scope.
     """
     # train on the FULL training set (the reference's `linker train`)
-    ds, cached = _golden_training_set_cached(
-        spark, profession, samples_dir, top_k
-    )
-    try:
-        rows = ds.select(*GOLDEN_FEATURES, "label").collect()
-    finally:
-        for c in cached:
-            c.unpersist()
+    with pins.scope():
+        rows = build_golden_training_set(
+            spark, profession, samples_dir, top_k
+        ).select(*GOLDEN_FEATURES, "label").collect()
     X = np.array([[r[c] for c in GOLDEN_FEATURES] for r in rows])
     y = np.array([r["label"] for r in rows], dtype=np.float64)
     model = _TRAINERS[classifier](X, y, GOLDEN_FEATURES)
 
-    wd = preprocess_wikidata_golden(
+    wd = pins.persist(preprocess_wikidata_golden(
         read_wikidata_set(spark, samples_dir, profession, goal=goal)
-    )
-    wd.cache()
-    tgt = golden_target(spark, samples_dir, profession)
-    tgt.cache()
+    ))
+    tgt = pins.persist(golden_target(spark, samples_dir, profession))
     pairs = block_golden(wd, tgt, top_k=top_k)
     feats = golden_features(pairs, wd, tgt)
     scored = feats.withColumn("score", model.score_column())
@@ -613,12 +593,11 @@ def link_golden(
         .select("qid", "tid", "score")
     )
     # materialize the (tiny, threshold-filtered) prediction set so the
-    # goal-set wd/tgt caches can be released here instead of leaking into
-    # the caller's session (ADVICE round-6); callers may release the
-    # returned checkpoint with cluster._unpersist_checkpoint once consumed
-    preds = preds.localCheckpoint()
-    wd.unpersist()
-    tgt.unpersist()
+    # goal-set wd/tgt pins can be released here instead of leaking into
+    # the caller's session (ADVICE round-6)
+    preds = pins.checkpoint(preds)
+    pins.release(wd)
+    pins.release(tgt)
     return preds
 
 
@@ -661,16 +640,12 @@ def evaluate_golden(
     bounded by |wd items| * top_k.
     """
     feats = GOLDEN_FEATURES + (["name_jw"] if include_jw else [])
-    ds, cached = _golden_training_set_cached(
-        spark, profession, samples_dir, top_k=5, include_jw=include_jw
-    )
-    try:
-        rows = ds.withColumn(
+    with pins.scope():
+        rows = build_golden_training_set(
+            spark, profession, samples_dir, top_k=5, include_jw=include_jw
+        ).withColumn(
             "fold", F.pmod(F.hash("qid", "tid"), F.lit(k))
         ).select(*feats, "label", "fold").collect()
-    finally:
-        for c in cached:
-            c.unpersist()
     X = np.array([[r[c] for c in feats] for r in rows])
     y = np.array([r["label"] for r in rows], dtype=np.float64)
     folds = np.array([r["fold"] for r in rows])

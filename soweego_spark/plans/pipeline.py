@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 from soweego_spark.operators import blocking as blk
 from soweego_spark.operators import classify as clf
 from soweego_spark.operators import pairfeatures as pf
+from soweego_spark.operators import pins
 from soweego_spark.operators.cluster import assign_clusters
 from soweego_spark.operators.extract import extract_signatures
 from soweego_spark.plans.checkpoint import StageCheckpointer
@@ -119,7 +120,7 @@ def run_pipeline(
     # interleaved A/Bs (eager 32s stable vs lazy ~28s mean at 2000
     # entities). On a real cluster with a persisted signatures stage
     # (checkpointer) the question disappears.
-    sig.cache()
+    sig = pins.persist(sig)
 
     pairs = stage(
         "pairs",
@@ -148,7 +149,7 @@ def run_pipeline(
             carry_rule_cols=True,
         ),
     )
-    features.cache()
+    features = pins.persist(features)
 
     # Train on the driver over the labeled pairs' feature rows.
     X, y = clf.collect_training_matrix(features, labeled_pairs)
@@ -166,7 +167,7 @@ def run_pipeline(
         extra={"model_w": [float(w) for w in model.weights], "model_b": model.bias},
     )
     # matches is consumed by clustering AND the metrics joins.
-    matches.cache()
+    matches = pins.persist(matches)
 
     clusters = stage(
         "clusters",

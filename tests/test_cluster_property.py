@@ -11,6 +11,7 @@ import random
 
 import pytest
 
+from soweego_spark.operators import pins
 from soweego_spark.operators.cluster import assign_clusters, connected_components
 
 
@@ -122,10 +123,9 @@ def test_cc_loop_one_action_per_iteration(spark):
         group = f"cc-jobs-{label}"
         sc.setJobGroup(group, "job-count probe")
         try:
-            out = connected_components(
-                edges, release_checkpoint=True, single_task_edges=0
-            )
-            assert out.select("cluster_id").distinct().count() == 1
+            with pins.scope():
+                out = connected_components(edges, single_task_edges=0)
+                assert out.select("cluster_id").distinct().count() == 1
         finally:
             sc.setJobGroup(None, None)
         jobs[label] = len(sc.statusTracker().getJobIdsForGroup(group))

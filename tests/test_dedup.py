@@ -124,6 +124,28 @@ def test_shingles_contents(spark):
     assert sorted(row["tokens"]) == ["a b c", "b c d"]
 
 
+def test_empty_text_has_no_shingles_and_no_near_dups(spark):
+    """An empty, blank or null text has no shingles: it gets no MinHash
+    signature, so two such docs are never Jaccard-1 near-dups of each
+    other (with the token "" they shared one signature and every
+    near-dup path dropped all but one of them)."""
+    from soweego_spark.operators.dedup import incremental_minhash_neardup
+
+    df = spark.createDataFrame(
+        [(1, ""), (2, ""), (3, "   "), (4, None), (5, "a b c d e f")],
+        "doc_id long, text string",
+    )
+    toks = shingles(df, n=3)
+    got = {r["doc_id"]: list(r["tokens"]) for r in toks.collect()}
+    assert got[1] == got[2] == got[3] == got[4] == []
+    assert sorted(r["doc_id"] for r in minhash_signatures(toks).collect()) == [5]
+    for family in ("xxhash64", "md5"):
+        assert minhash_lsh_candidates(toks, hash_family=family).count() == 0
+    for mode in ("conservative", "exact"):
+        kept = incremental_minhash_neardup(toks, None, within_batch=mode)
+        assert sorted(r["doc_id"] for r in kept.collect()) == [1, 2, 3, 4, 5]
+
+
 def test_exact_duplicates_counts(spark, docs):
     got = exact_duplicates(docs)
     n_groups = got.count()
@@ -513,6 +535,25 @@ def test_exact_mode_bounds_pinned_checkpoints(spark):
     ).collect()
     after = jsc.getPersistentRDDs().size()
     assert after <= before + 3, (before, after)
+
+    # inside a pin scope (what a stage or a per-batch loop opens) nothing
+    # outlives the scope, on either greedy path
+    from soweego_spark.operators import pins
+
+    def pinned_ids():  # ids, not a count: the GC may drop older pins
+        return set(spark.sparkContext._jsc.getPersistentRDDs())
+
+    for cap in (1_000_000, 0):
+        before = pinned_ids()
+        with pins.scope():
+            incremental_minhash_neardup(
+                new,
+                corpus,
+                jaccard_threshold=0.7,
+                within_batch="exact",
+                max_component_edges=cap,
+            ).collect()
+        assert pinned_ids() - before == set(), cap
 
 
 def test_greedy_joins_one_action_per_round(spark):
