@@ -9,7 +9,10 @@ multi-executor clusters"):
         jobs/link_job.py \
         --pages /lake/pages --labeled /lake/labeled_pairs \
         --output /lake/er_out --checkpoints /lake/_ckpt \
-        [--classifier logistic] [--threshold 0.5] [--synthetic N]
+        [--classifier NAME] [--threshold 0.5] [--synthetic N]
+
+``--classifier`` takes any model family in
+``soweego_spark.operators.classify.TRAINERS`` (default ``logistic``).
 
 Reads the pages table (parquet; Iceberg in production), runs
 extract -> block -> featurize -> train -> score -> rules -> threshold ->
@@ -31,13 +34,15 @@ import sys
 
 
 def main() -> None:
+    from soweego_spark.operators import classify as clf
+
     ap = argparse.ArgumentParser()
     ap.add_argument("--pages", help="parquet path of the pages table")
     ap.add_argument("--labeled", help="parquet path of labeled pairs")
     ap.add_argument("--output", required=True)
     ap.add_argument("--checkpoints", default=None)
     ap.add_argument("--classifier", default="logistic",
-                    choices=["logistic", "naive_bayes", "svm", "slp"])
+                    choices=sorted(clf.TRAINERS))
     ap.add_argument("--threshold", type=float, default=0.5)
     ap.add_argument("--top-k", type=int, default=5)
     ap.add_argument("--synthetic", type=int, default=0,

@@ -2,20 +2,30 @@
 
 The labeled feature matrix is small (≤ low 10^5 pairs even for the largest
 reference runs) -> train on the driver in numpy with pinned determinism, then
-push the fitted *linear* model back into the plan as pure column arithmetic:
-``sigmoid(X·w + b)`` is a JVM-side expression — scoring costs zero Python.
-This is the BASELINE.json "broadcast-distributed trained linear classifier"
-pattern; for a linear model the broadcast degenerates to literals in the
-plan, which is strictly cheaper than shipping a pickled model to a pandas
-UDF.
+push the fitted model back into the plan. Every fitted model has
+``predict_proba(X)``; :func:`score` is the one scoring seam. A *linear*
+model becomes pure column arithmetic: ``sigmoid(X·w + b)`` is a JVM-side
+expression — scoring costs zero Python. This is the BASELINE.json
+"broadcast-distributed trained linear classifier" pattern; for a linear
+model the broadcast degenerates to literals in the plan, which is strictly
+cheaper than shipping a pickled model to a pandas UDF. Only a model with
+no Catalyst form (forest, SVC, MLP, ensembles) is broadcast to one
+Arrow-batched pandas UDF.
 
-Models (reference parity):
-  LogisticRegression  M2, liblinear C=1.0 analogue     -> IRLS w/ L2(1/C)
-  NaiveBayes          M1, binarize=0.2 alpha=1e-4      -> Bernoulli NB; its
-                      log-odds are LINEAR in the binarized features, so
-                      scoring is again pure column math
-  LinearSVM           M3 (no probabilities; sign -> 0/1) -> pegasos-style
-                      deterministic subgradient descent
+:data:`TRAINERS` names every model family the linker can train, one
+``train_*(X, y, features)`` per name:
+
+  logistic      M2, liblinear C=1.0 analogue     -> IRLS w/ L2(1/C)
+  naive_bayes   M1, binarize=0.2 alpha=1e-4      -> Bernoulli NB; its
+                log-odds are LINEAR in the binarized features, so
+                scoring is again pure column math
+  svm           M3 (no probabilities; sign -> 0/1) -> pegasos-style
+                deterministic subgradient descent
+  svc           M4 SMO SVC (RBF or linear kernel) + Platt probabilities
+  random_forest M5 entropy forest
+  slp / mlp     M6 / M7 keras-architecture networks in numpy
+  voting        M8 soft vote over the 5 ensemble members
+  gated/stacked M9 / M10 super-learners
 
 Post-classification rules (M12, linker/link.py:203-215,325-367):
   name rule: score -> 0 when the two name-token sets are disjoint
@@ -63,6 +73,16 @@ class LinearModel:
         if self.kind == "svm":
             return (acc > 0).cast("double")
         return F.lit(1.0) / (F.lit(1.0) + F.exp(-acc))
+
+    def predict_proba(self, X: np.ndarray) -> np.ndarray:
+        """The same model as :meth:`score_column`, in numpy."""
+        X = np.asarray(X, dtype=np.float64)
+        if self.binarize is not None:
+            X = (X > self.binarize).astype(np.float64)
+        z = X @ self.weights + self.bias
+        if self.kind == "svm":
+            return (z > 0).astype(np.float64)
+        return 1.0 / (1.0 + np.exp(-np.clip(z, -35, 35)))
 
 
 def train_logistic(
@@ -141,30 +161,68 @@ def train_linear_svm(
 
 
 def collect_training_matrix(
-    features: DataFrame, labeled: DataFrame
-) -> tuple[np.ndarray, np.ndarray]:
+    features: DataFrame,
+    labeled: DataFrame | None,
+    columns: list[str] = FEATURE_COLUMNS,
+    on: tuple[str, ...] = ("url_a", "url_b"),
+    folds: int | None = None,
+):
     """Join the labeled pair set to its feature vectors, collect to driver.
 
     The collect is bounded: |labeled pairs|, not |candidate pairs|.
+    ``labeled=None`` when ``features`` already carries the ``label``.
+    Returns ``(X, y)``; with ``folds=k`` also each row's fold,
+    ``pmod(hash(on), k)`` — a pinned hash split of the pair key.
     """
     # Broadcast the labeled side: it is small by construction, so the big
     # feature table is probed map-side instead of shuffled on the pair key.
     # Arrow toPandas instead of collect(): row-at-a-time Row pickling was
     # the bulk of the training stage's wall (~6s of 7.6s at 91k rows,
     # profiled); the columnar transfer is one numpy copy.
-    pdf = (
-        features.join(F.broadcast(labeled), ["url_a", "url_b"])
-        .select(*FEATURE_COLUMNS, "label")
-        .toPandas()
-    )
-    X = pdf[FEATURE_COLUMNS].to_numpy(dtype=np.float64)
+    df = features
+    if labeled is not None:
+        df = df.join(F.broadcast(labeled), list(on))
+    cols = [*columns, "label"]
+    if folds is not None:
+        df = df.withColumn("fold", F.pmod(F.hash(*on), F.lit(folds)))
+        cols.append("fold")
+    pdf = df.select(*cols).toPandas()
+    X = pdf[list(columns)].to_numpy(dtype=np.float64)
     y = pdf["label"].to_numpy(dtype=np.float64)
-    return X, y
+    if folds is None:
+        return X, y
+    return X, y, pdf["fold"].to_numpy()
 
 
-def score(features: DataFrame, model: LinearModel) -> DataFrame:
-    """(url_a, url_b, features...) -> + score column, fully JVM-side."""
-    return features.withColumn("score", model.score_column())
+def score(features: DataFrame, model) -> DataFrame:
+    """(url_a, url_b, features...) -> + score column, for any fitted model.
+
+    A :class:`LinearModel` is scored by its Catalyst expression, fully
+    JVM-side. Any other model has no such form: it is broadcast and scored
+    in one SCALAR_ITER pandas UDF — one deserialization per executor Python
+    worker, Arrow batches through BLAS-backed numpy ``predict_proba``.
+
+    For the UDF, pass a persisted (or checkpointed) feature table: when a
+    query keeps only the score, Spark inlines the feature expressions into
+    the UDF's input, and a feature built from nested higher-order functions
+    (``name_lev``, the date similarities) then leaves the UDF unextracted —
+    the task fails with "Cannot evaluate expression: _score".
+    """
+    if isinstance(model, LinearModel):
+        return features.withColumn("score", model.score_column())
+    from pyspark.sql.functions import pandas_udf
+
+    bm = features.sparkSession.sparkContext.broadcast(model)
+    cols = model.features
+
+    @pandas_udf("double")
+    def _score(it: Iterator[pd.DataFrame]) -> Iterator[pd.Series]:
+        m = bm.value
+        for batch in it:
+            X = batch[list(cols)].to_numpy(dtype=np.float64)
+            yield pd.Series(m.predict_proba(X))
+
+    return features.withColumn("score", _score(F.struct(*cols)))
 
 
 def apply_rules(
@@ -273,6 +331,12 @@ def confusion_and_f1(predicted: DataFrame, labeled: DataFrame) -> dict:
     tp = int(row["tp"] or 0)
     fp = int(row["fp"] or 0)
     fn = n_pos - tp
+    precision, recall, f1 = precision_recall_f1(tp, fp, fn)
+    return dict(tp=tp, fp=fp, fn=fn, precision=precision, recall=recall, f1=f1)
+
+
+def precision_recall_f1(tp: int, fp: int, fn: int) -> tuple[float, float, float]:
+    """P/R/F1 from confusion counts; 0.0 where a denominator is 0."""
     precision = tp / (tp + fp) if tp + fp else 0.0
     recall = tp / (tp + fn) if tp + fn else 0.0
     f1 = (
@@ -280,7 +344,7 @@ def confusion_and_f1(predicted: DataFrame, labeled: DataFrame) -> dict:
         if precision + recall
         else 0.0
     )
-    return dict(tp=tp, fp=fp, fn=fn, precision=precision, recall=recall, f1=f1)
+    return precision, recall, f1
 
 
 # ----------------------------------------------------------------- M5: RF
@@ -404,26 +468,6 @@ def train_random_forest(
             _build_tree(X[boot], y[boot], rng, max_depth, min_leaf, n_feats)
         )
     return ForestModel(list(features), trees)
-
-
-def score_broadcast(features: DataFrame, model) -> DataFrame:
-    """Score with a broadcast (non-linear) model in a SCALAR_ITER pandas
-    UDF — one deserialization per executor python worker, Arrow batches
-    through BLAS-backed numpy predict."""
-    from pyspark.sql.functions import pandas_udf
-
-    spark = features.sparkSession
-    bm = spark.sparkContext.broadcast(model)
-    cols = model.features
-
-    @pandas_udf("double")
-    def _score(it: Iterator[pd.DataFrame]) -> Iterator[pd.Series]:
-        m = bm.value
-        for batch in it:
-            X = batch[list(cols)].to_numpy(dtype=np.float64)
-            yield pd.Series(m.predict_proba(X))
-
-    return features.withColumn("score", _score(F.struct(*cols)))
 
 
 # ------------------------------------------------------------- M4: SVC
@@ -851,20 +895,6 @@ def train_mlp(
     return MLPModel(list(features), best)
 
 
-def _model_proba(m, X: np.ndarray) -> np.ndarray:
-    """Positive-class probability for any fitted model in this module."""
-    X = np.asarray(X, dtype=np.float64)
-    if hasattr(m, "predict_proba"):
-        return m.predict_proba(X)
-    Xm = X
-    if m.binarize is not None:
-        Xm = (X > m.binarize).astype(np.float64)
-    z = Xm @ m.weights + m.bias
-    if m.kind == "svm":
-        return (z > 0).astype(np.float64)
-    return 1.0 / (1.0 + np.exp(-np.clip(z, -35, 35)))
-
-
 @dataclass
 class VotingModel:
     """M8 (reference classifiers.py:467-539): soft-voting ensemble —
@@ -876,25 +906,23 @@ class VotingModel:
 
     def predict_proba(self, X: np.ndarray) -> np.ndarray:
         X = np.asarray(X, dtype=np.float64)
-        return np.mean([_model_proba(m, X) for m in self.members], axis=0)
+        return np.mean([m.predict_proba(X) for m in self.members], axis=0)
 
 
 def _ensemble_trainers(n_trees: int, seed: int, nn_epochs: int):
-    """The reference's 5 ensemble members (constants.py:297-303), as
-    (name, trainer) thunks over any (X, y) — feature names are positional
-    inside ensembles."""
+    """The reference's 5 ensemble members (constants.py:297-303
+    CLASSIFIERS_FOR_ENSEMBLE: NB, LR, RF, SLP, MLP), as trainer thunks
+    over any (X, y) — feature names are positional inside ensembles."""
     def _feat(X):
         return [f"x{i}" for i in range(np.asarray(X).shape[1])]
 
     return [
-        ("nb", lambda X, y: train_naive_bayes(X, y, _feat(X))),
-        ("lr", lambda X, y: train_logistic(X, y, _feat(X))),
-        ("rf", lambda X, y: train_random_forest(
-            X, y, _feat(X), n_trees=n_trees, seed=seed)),
-        ("slp", lambda X, y: train_slp(
-            X, y, _feat(X), epochs=nn_epochs, seed=seed)),
-        ("mlp", lambda X, y: train_mlp(
-            X, y, _feat(X), epochs=nn_epochs, seed=seed)),
+        lambda X, y: train_naive_bayes(X, y, _feat(X)),
+        lambda X, y: train_logistic(X, y, _feat(X)),
+        lambda X, y: train_random_forest(
+            X, y, _feat(X), n_trees=n_trees, seed=seed),
+        lambda X, y: train_slp(X, y, _feat(X), epochs=nn_epochs, seed=seed),
+        lambda X, y: train_mlp(X, y, _feat(X), epochs=nn_epochs, seed=seed),
     ]
 
 
@@ -906,17 +934,10 @@ def train_voting(
     seed: int = 610,
     nn_epochs: int = 1000,
 ) -> VotingModel:
-    """Soft vote over the reference's full 5-member ensemble — NB, LR, RF,
-    SLP, MLP (constants.py:297-303 CLASSIFIERS_FOR_ENSEMBLE)."""
+    """M8: soft vote over the reference's full 5-member ensemble."""
     return VotingModel(
         list(features),
-        [
-            train_naive_bayes(X, y, features),
-            train_logistic(X, y, features),
-            train_random_forest(X, y, features, n_trees=n_trees, seed=seed),
-            train_slp(X, y, features, epochs=nn_epochs, seed=seed),
-            train_mlp(X, y, features, epochs=nn_epochs, seed=seed),
-        ],
+        [train(X, y) for train in _ensemble_trainers(n_trees, seed, nn_epochs)],
     )
 
 
@@ -942,9 +963,8 @@ class SuperLearnerModel:
     def predict_proba(self, X: np.ndarray) -> np.ndarray:
         h = np.asarray(X, dtype=np.float64)
         for layer in self.layers:
-            h = np.column_stack([_model_proba(m, h) for m in layer])
-        z = h @ self.meta.weights + self.meta.bias
-        return 1.0 / (1.0 + np.exp(-np.clip(z, -35, 35)))
+            h = np.column_stack([m.predict_proba(h) for m in layer])
+        return self.meta.predict_proba(h)
 
 
 def _oof_probs(
@@ -959,9 +979,9 @@ def _oof_probs(
         lo, hi = edges[f], edges[f + 1]
         mask = np.ones(n, dtype=bool)
         mask[lo:hi] = False
-        for j, (_, trainer) in enumerate(trainers):
+        for j, trainer in enumerate(trainers):
             m = trainer(X[mask], y[mask])
-            oof[lo:hi, j] = _model_proba(m, X[lo:hi])
+            oof[lo:hi, j] = m.predict_proba(X[lo:hi])
     return oof
 
 
@@ -974,7 +994,7 @@ def _train_super_learner(
     layers, h = [], X
     for _ in range(n_layers):
         oof = _oof_probs(h, y, trainers, folds)
-        layers.append([trainer(h, y) for _, trainer in trainers])
+        layers.append([trainer(h, y) for trainer in trainers])
         h = oof
     meta = train_slp(
         h, y, [f"m{i}" for i in range(h.shape[1])],
@@ -1011,3 +1031,19 @@ def train_stacked(
     return _train_super_learner(
         X, y, features, 2, folds, n_trees, seed, nn_epochs, "stacked"
     )
+
+
+# One name per model family: the linker's `--classifier` choices, the
+# pipeline's `PipelineConfig.classifier` and the golden protocol's rows.
+TRAINERS = {
+    "logistic": train_logistic,
+    "naive_bayes": train_naive_bayes,
+    "svm": train_linear_svm,
+    "svc": train_svc,
+    "random_forest": train_random_forest,
+    "slp": train_slp,
+    "mlp": train_mlp,
+    "voting": train_voting,
+    "gated": train_gated,
+    "stacked": train_stacked,
+}

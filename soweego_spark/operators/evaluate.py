@@ -9,12 +9,14 @@ train on the rest, predict the held-out fold, union predictions across folds
 
 from __future__ import annotations
 
+import functools
+import itertools
+
 import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from soweego_spark.operators import classify as clf
-from soweego_spark.operators.pairfeatures import FEATURE_COLUMNS
 
 
 def pairwise_cluster_metrics(
@@ -107,10 +109,26 @@ def pairwise_cluster_metrics(
     )
 
 
-def with_fold(labeled: DataFrame, k: int = 5) -> DataFrame:
-    return labeled.withColumn(
-        "fold", F.pmod(F.hash("url_a", "url_b"), F.lit(k))
-    )
+def _fold_counts(
+    X: np.ndarray,
+    y: np.ndarray,
+    folds: np.ndarray,
+    k: int,
+    trainer,
+    threshold: float,
+) -> list[tuple[int, int, int]]:
+    """The one k-fold loop: per fold, train on the other folds and
+    threshold the held-out fold's ``predict_proba``; (tp, fp, fn) per fold."""
+    out = []
+    for f in range(k):
+        test = folds == f
+        hit = trainer(X[~test], y[~test]).predict_proba(X[test]) >= threshold
+        pos = y[test] == 1
+        out.append(
+            (int((pos & hit).sum()), int((~pos & hit).sum()),
+             int((pos & ~hit).sum()))
+        )
+    return out
 
 
 def kfold_scores(
@@ -126,36 +144,12 @@ def kfold_scores(
     fold training happens in numpy on the driver, mirroring the reference's
     sklearn-on-one-node evaluation protocol (docs/evaluations.rst:5-14).
     """
-    rows = (
-        with_fold(labeled, k)
-        .join(features, ["url_a", "url_b"])
-        .select(*FEATURE_COLUMNS, "label", "fold")
-        .collect()
+    X, y, folds = clf.collect_training_matrix(features, labeled, folds=k)
+    counts = _fold_counts(X, y, folds, k, trainer, threshold)
+    precision, recall, f1 = clf.precision_recall_f1(
+        *np.sum(counts, axis=0).tolist()
     )
-    X = np.array([[r[c] for c in FEATURE_COLUMNS] for r in rows])
-    y = np.array([r["label"] for r in rows], dtype=np.float64)
-    folds = np.array([r["fold"] for r in rows])
-
-    per_fold = []
-    tp = fp = fn = 0
-    for f in range(k):
-        test = folds == f
-        model = trainer(X[~test], y[~test])
-        # _model_proba handles every model family in classify.py (linear
-        # column models, forest, MLP, SVC, voting/super-learner ensembles).
-        pred = clf._model_proba(model, X[test])
-        hit = pred >= threshold
-        ftp = int(((y[test] == 1) & hit).sum())
-        ffp = int(((y[test] == 0) & hit).sum())
-        ffn = int(((y[test] == 1) & ~hit).sum())
-        tp, fp, fn = tp + ftp, fp + ffp, fn + ffn
-        p = ftp / (ftp + ffp) if ftp + ffp else 0.0
-        r = ftp / (ftp + ffn) if ftp + ffn else 0.0
-        per_fold.append(2 * p * r / (p + r) if p + r else 0.0)
-
-    precision = tp / (tp + fp) if tp + fp else 0.0
-    recall = tp / (tp + fn) if tp + fn else 0.0
-    f1 = 2 * precision * recall / (precision + recall) if precision + recall else 0.0
+    per_fold = [clf.precision_recall_f1(*c)[2] for c in counts]
     return dict(
         f1=f1,
         precision=precision,
@@ -164,20 +158,6 @@ def kfold_scores(
         f1_std=float(np.std(per_fold)),
         per_fold=per_fold,
     )
-
-
-def collect_labeled_matrix(features: DataFrame, labeled: DataFrame, k: int = 5):
-    """One bounded collect shared by kfold/grid search."""
-    rows = (
-        with_fold(labeled, k)
-        .join(features, ["url_a", "url_b"])
-        .select(*FEATURE_COLUMNS, "label", "fold")
-        .collect()
-    )
-    X = np.array([[r[c] for c in FEATURE_COLUMNS] for r in rows])
-    y = np.array([r["label"] for r in rows], dtype=np.float64)
-    folds = np.array([r["fold"] for r in rows])
-    return X, y, folds
 
 
 def grid_search(
@@ -193,27 +173,16 @@ def grid_search(
     combination in sorted-key iteration order (the reference pins seeds 610
     and 1269 for the same reason). One collect, numpy folds on the driver.
     """
-    import itertools
-
-    X, y, folds = collect_labeled_matrix(features, labeled, k)
+    X, y, folds = clf.collect_training_matrix(features, labeled, folds=k)
     keys = sorted(param_grid)
     best = None
     results = []
     for combo in itertools.product(*[param_grid[kk] for kk in keys]):
         params = dict(zip(keys, combo))
-
-        tp = fp = fn = 0
-        for f in range(k):
-            test = folds == f
-            model = trainer(X[~test], y[~test], **params)
-            pred = clf._model_proba(model, X[test])
-            hit = pred >= threshold
-            tp += int(((y[test] == 1) & hit).sum())
-            fp += int(((y[test] == 0) & hit).sum())
-            fn += int(((y[test] == 1) & ~hit).sum())
-        p = tp / (tp + fp) if tp + fp else 0.0
-        r = tp / (tp + fn) if tp + fn else 0.0
-        f1 = 2 * p * r / (p + r) if p + r else 0.0
+        counts = _fold_counts(
+            X, y, folds, k, functools.partial(trainer, **params), threshold
+        )
+        f1 = clf.precision_recall_f1(*np.sum(counts, axis=0).tolist())[2]
         results.append({"params": params, "f1": f1})
         if best is None or f1 > best["f1"] + 1e-12:
             best = {"params": params, "f1": f1}

@@ -15,7 +15,7 @@ subset. This module replays the reference's training-set construction
                 -> preprocess_target (workflow.py:256-320)
   FTS blocking  -> top-5 per QID (blocking.py:44-166)
   C1-C7 features over (QID, tid) pairs (workflow.py:323-433)
-  M1/M2/M3/M6   -> 5-fold evaluation (evaluate.py:357-396)
+  clf.TRAINERS  -> 5-fold evaluation (evaluate.py:357-396)
 
 so the published per-profession scores (docs/evaluations.rst:78-87, e.g.
 IMDb director NB F1 .932) can be reproduced beside ours on identical
@@ -47,6 +47,7 @@ Arrow-batched kernels; the only collect is the labeled feature matrix
 
 from __future__ import annotations
 
+import functools
 import os
 
 import numpy as np
@@ -67,6 +68,7 @@ from soweego_spark.functions import dates, simkernels
 from soweego_spark.functions.text import normalize_values, tokenize_values
 from soweego_spark.operators import classify as clf
 from soweego_spark.operators import pins
+from soweego_spark.operators.evaluate import _fold_counts
 from soweego_spark.operators.pairfeatures import (
     FEATURE_MISSING_VALUE,
     _date_sim_expr,
@@ -557,20 +559,21 @@ def link_golden(
     """
     # train on the FULL training set (the reference's `linker train`)
     with pins.scope():
-        rows = build_golden_training_set(
-            spark, profession, samples_dir, top_k
-        ).select(*GOLDEN_FEATURES, "label").collect()
-    X = np.array([[r[c] for c in GOLDEN_FEATURES] for r in rows])
-    y = np.array([r["label"] for r in rows], dtype=np.float64)
-    model = _TRAINERS[classifier](X, y, GOLDEN_FEATURES)
+        X, y = clf.collect_training_matrix(
+            build_golden_training_set(spark, profession, samples_dir, top_k),
+            None,
+            GOLDEN_FEATURES,
+        )
+    model = trainer(classifier)(X, y, GOLDEN_FEATURES)
 
     wd = pins.persist(preprocess_wikidata_golden(
         read_wikidata_set(spark, samples_dir, profession, goal=goal)
     ))
     tgt = pins.persist(golden_target(spark, samples_dir, profession))
     pairs = block_golden(wd, tgt, top_k=top_k)
-    feats = golden_features(pairs, wd, tgt)
-    scored = feats.withColumn("score", model.score_column())
+    # pinned: a broadcast-scored model needs plain feature columns
+    feats = pins.persist(golden_features(pairs, wd, tgt))
+    scored = clf.score(feats, model)
     if name_rule:
         names_ok = (
         pairs.join(wd.select("qid", "all_names"), "qid")
@@ -593,34 +596,28 @@ def link_golden(
         .select("qid", "tid", "score")
     )
     # materialize the (tiny, threshold-filtered) prediction set so the
-    # goal-set wd/tgt pins can be released here instead of leaking into
+    # goal-set feats/wd/tgt pins can be released here instead of leaking into
     # the caller's session (ADVICE round-6)
     preds = pins.checkpoint(preds)
-    pins.release(wd)
-    pins.release(tgt)
+    for df in (feats, wd, tgt):
+        pins.release(df)
     return preds
 
 
 # --------------------------------------------------------------- evaluation
 
-_TRAINERS = {
-    # the published protocol's hyper-parameters (docs/evaluations.rst:17-27)
-    "naive_bayes": lambda X, y, feats: clf.train_naive_bayes(
-        X, y, features=feats, binarize=0.1, alpha=0.0001
-    ),
-    "logistic": lambda X, y, feats: clf.train_logistic(
-        X, y, features=feats
-    ),
-    "linear_svm": lambda X, y, feats: clf.train_linear_svm(
-        X, y, features=feats
-    ),
-    "slp": lambda X, y, feats: clf.train_slp(X, y, features=feats),
-    # the published table's 'SVM' = libsvm SVC with a LINEAR kernel
-    # (docs/evaluations.rst:27-31), Platt probabilities
-    "svm": lambda X, y, feats: clf.train_svc(
-        X, y, features=feats, kernel="linear"
-    ),
+# The published protocol's hyper-parameters (docs/evaluations.rst:17-31)
+# where they differ from the linker's defaults: the published 'SVM' rows
+# are libsvm SVC with a LINEAR kernel and Platt probabilities.
+_PROTOCOL = {
+    "naive_bayes": {"binarize": 0.1},
+    "svc": {"kernel": "linear"},
 }
+
+
+def trainer(name: str):
+    """``clf.TRAINERS[name]`` with the published protocol's overrides."""
+    return functools.partial(clf.TRAINERS[name], **_PROTOCOL.get(name, {}))
 
 
 def evaluate_golden(
@@ -641,37 +638,30 @@ def evaluate_golden(
     """
     feats = GOLDEN_FEATURES + (["name_jw"] if include_jw else [])
     with pins.scope():
-        rows = build_golden_training_set(
-            spark, profession, samples_dir, top_k=5, include_jw=include_jw
-        ).withColumn(
-            "fold", F.pmod(F.hash("qid", "tid"), F.lit(k))
-        ).select(*feats, "label", "fold").collect()
-    X = np.array([[r[c] for c in feats] for r in rows])
-    y = np.array([r["label"] for r in rows], dtype=np.float64)
-    folds = np.array([r["fold"] for r in rows])
+        X, y, folds = clf.collect_training_matrix(
+            build_golden_training_set(
+                spark, profession, samples_dir, top_k=5, include_jw=include_jw
+            ),
+            None,
+            feats,
+            on=("qid", "tid"),
+            folds=k,
+        )
 
     out = {"profession": profession, "pairs": int(len(y)),
            "positives": int(y.sum())}
     for name in classifiers:
-        ps, rs, fs = [], [], []
-        for f in range(k):
-            test = folds == f
-            model = _TRAINERS[name](X[~test], y[~test], feats)
-            pred = clf._model_proba(model, X[test]) >= threshold
-            tp = int(((y[test] == 1) & pred).sum())
-            fp = int(((y[test] == 0) & pred).sum())
-            fn = int(((y[test] == 1) & ~pred).sum())
-            p = tp / (tp + fp) if tp + fp else 0.0
-            r = tp / (tp + fn) if tp + fn else 0.0
-            ps.append(p)
-            rs.append(r)
-            fs.append(2 * p * r / (p + r) if p + r else 0.0)
+        train = functools.partial(trainer(name), features=feats)
+        p, r, f = np.array([
+            clf.precision_recall_f1(*c)
+            for c in _fold_counts(X, y, folds, k, train, threshold)
+        ]).T
         out[name] = {
-            "precision": float(np.mean(ps)),
-            "precision_std": float(np.std(ps)),
-            "recall": float(np.mean(rs)),
-            "recall_std": float(np.std(rs)),
-            "f1": float(np.mean(fs)),
-            "f1_std": float(np.std(fs)),
+            "precision": float(np.mean(p)),
+            "precision_std": float(np.std(p)),
+            "recall": float(np.mean(r)),
+            "recall_std": float(np.std(r)),
+            "f1": float(np.mean(f)),
+            "f1_std": float(np.std(f)),
         }
     return out

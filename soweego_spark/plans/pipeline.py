@@ -11,6 +11,8 @@ blocking.py:86-94, done with manifests).
 
 from __future__ import annotations
 
+import hashlib
+import pickle
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
@@ -40,7 +42,7 @@ class PipelineConfig:
     # blocking junk is shuffled, assembled, and featurized downstream.
     lsh_rows_per_band: int = 3
     threshold: float = clf.CONFIDENCE_THRESHOLD
-    classifier: str = "logistic"  # logistic | naive_bayes | svm
+    classifier: str = "logistic"  # a key of clf.TRAINERS
     name_rule: bool = True
     url_rule: bool = True
     occupation_closure: dict = field(default_factory=dict)
@@ -51,14 +53,6 @@ class PipelineConfig:
         return d
 
 
-_TRAINERS = {
-    "logistic": clf.train_logistic,
-    "naive_bayes": clf.train_naive_bayes,
-    "svm": clf.train_linear_svm,
-    "slp": clf.train_slp,  # M6 — still a LinearModel: JVM-side scoring
-}
-
-
 @dataclass
 class PipelineResult:
     signatures: DataFrame
@@ -67,7 +61,7 @@ class PipelineResult:
     scored: DataFrame
     matches: DataFrame
     clusters: DataFrame
-    model: clf.LinearModel
+    model: object  # the fitted clf.TRAINERS[config.classifier] model
     metrics: dict
     lineage: dict = field(default_factory=dict)  # stage -> manifest (counts
     # per partition + config hash), populated when a checkpointer is used
@@ -153,7 +147,10 @@ def run_pipeline(
 
     # Train on the driver over the labeled pairs' feature rows.
     X, y = clf.collect_training_matrix(features, labeled_pairs)
-    model = _TRAINERS[cfg.classifier](X, y)
+    model = clf.TRAINERS[cfg.classifier](X, y)
+    # the matches/clusters stages depend on the fitted model, whatever its
+    # family: key them on a digest of it
+    model_key = {"model": hashlib.sha256(pickle.dumps(model)).hexdigest()}
 
     scored = clf.apply_rules(
         clf.score(features, model),
@@ -164,7 +161,7 @@ def run_pipeline(
     matches = stage(
         "matches",
         lambda: clf.threshold_and_dedup(scored, threshold=cfg.threshold),
-        extra={"model_w": [float(w) for w in model.weights], "model_b": model.bias},
+        extra=model_key,
     )
     # matches is consumed by clustering AND the metrics joins.
     matches = pins.persist(matches)
@@ -172,7 +169,7 @@ def run_pipeline(
     clusters = stage(
         "clusters",
         lambda: assign_clusters(sig.select("url"), matches),
-        extra={"model_w": [float(w) for w in model.weights], "model_b": model.bias},
+        extra=model_key,
     )
 
     metrics = clf.confusion_and_f1(matches, labeled_pairs)

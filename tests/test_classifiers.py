@@ -1,7 +1,10 @@
-"""Classifier surface: RF (M5) quality + determinism, broadcast scoring
-pattern, grid search (M11), subset-token blocking (B2/J4)."""
+"""Classifier surface: the TRAINERS registry and the one scoring seam over
+every model family, RF (M5) quality + determinism, grid search (M11),
+subset-token blocking (B2/J4)."""
 
 from __future__ import annotations
+
+import functools
 
 import numpy as np
 import pytest
@@ -11,7 +14,23 @@ from soweego_spark.operators import classify as clf
 from soweego_spark.operators import evaluate as ev
 from soweego_spark.operators import pairfeatures as pf
 from soweego_spark.operators.extract import extract_signatures
+from soweego_spark.plans import golden
 from soweego_spark.sources.pages import generate_pages, pages_to_spark
+
+
+# small settings, so every family trains in seconds
+_SMALL = {
+    "random_forest": {"n_trees": 10},
+    "slp": {"epochs": 80},
+    "mlp": {"epochs": 60},
+    "voting": {"n_trees": 5, "nn_epochs": 60},
+    "gated": {"n_trees": 5, "nn_epochs": 60},
+    "stacked": {"n_trees": 5, "nn_epochs": 60},
+}
+
+
+def _small(name):
+    return functools.partial(clf.TRAINERS[name], **_SMALL.get(name, {}))
 
 
 @pytest.fixture(scope="module")
@@ -40,15 +59,47 @@ def test_random_forest_quality_and_determinism(spark, fixture_frames):
 
 
 def test_broadcast_scoring_matches_driver_predict(spark, fixture_frames):
+    """For every registry family, the one scoring seam (a Catalyst
+    expression for a LinearModel, the broadcast UDF otherwise) equals the
+    model's driver-side predict_proba on the scored rows."""
     _, features, labeled = fixture_frames
     X, y = clf.collect_training_matrix(features, labeled)
-    model = clf.train_random_forest(X, y, n_trees=20, seed=610)
-    scored = clf.score_broadcast(features, model)
-    rows = scored.select(*clf.FEATURE_COLUMNS, "score").collect()
-    Xs = np.array([[r[c] for c in clf.FEATURE_COLUMNS] for r in rows])
-    expected = model.predict_proba(Xs)
-    got = np.array([r["score"] for r in rows])
-    np.testing.assert_allclose(got, expected, atol=1e-12)
+    for name in clf.TRAINERS:
+        model = _small(name)(X, y)
+        scored = clf.score(features, model)
+        rows = scored.select(*clf.FEATURE_COLUMNS, "score").collect()
+        Xs = np.array([[r[c] for c in clf.FEATURE_COLUMNS] for r in rows])
+        expected = model.predict_proba(Xs)
+        got = np.array([r["score"] for r in rows])
+        np.testing.assert_allclose(got, expected, atol=1e-12, err_msg=name)
+
+
+def test_registry_names_one_model_family():
+    """Each registry name trains one model family, and the golden
+    protocol's overrides sit on top of the same registry entries."""
+    rng = np.random.RandomState(0)
+    X = rng.rand(60, 3)
+    y = (X[:, 0] + 0.1 * rng.randn(60) > 0.5).astype(float)
+    feats = ["a", "b", "c"]
+    expected = {
+        "logistic": (clf.LinearModel, "logistic"),
+        "naive_bayes": (clf.LinearModel, "nb"),
+        "svm": (clf.LinearModel, "svm"),
+        "svc": (clf.SVCModel, "svc"),
+        "random_forest": (clf.ForestModel, "rf"),
+        "slp": (clf.LinearModel, "slp"),
+        "mlp": (clf.MLPModel, "mlp"),
+        "voting": (clf.VotingModel, "voting"),
+        "gated": (clf.SuperLearnerModel, "gated"),
+        "stacked": (clf.SuperLearnerModel, "stacked"),
+    }
+    assert set(clf.TRAINERS) == set(expected)
+    for name, (cls, kind) in expected.items():
+        m = _small(name)(X, y, feats)
+        assert (type(m), m.kind, m.features) == (cls, kind, feats), name
+    assert clf.TRAINERS["svc"](X, y, feats).kernel == "rbf"
+    assert golden.trainer("svc")(X, y, feats).kernel == "linear"
+    assert golden.trainer("naive_bayes")(X, y, feats).binarize == 0.1
 
 
 def test_grid_search_picks_best(spark, fixture_frames):
@@ -151,8 +202,8 @@ def test_voting_ensemble(spark, fixture_frames):
         axis=0,
     )
     np.testing.assert_allclose(p, member_mean, atol=1e-12)
-    # and scores identically through the broadcast UDF path
-    scored = clf.score_broadcast(features, model)
+    # and scores through the broadcast UDF path
+    scored = clf.score(features, model)
     assert scored.filter("score >= 0.5").count() > 0
 
 
@@ -193,24 +244,18 @@ def test_gated_and_stacked_ensembles(spark, fixture_frames):
         f1 = f1_of(model.predict_proba(X))
         assert f1 >= 0.97, (trainer.__name__, f1)
         # broadcast-scoring path accepts it (predict_proba contract)
-        scored = clf.score_broadcast(features, model)
+        scored = clf.score(features, model)
         assert "score" in scored.columns
 
 
 def test_kfold_accepts_every_model_family(spark, fixture_frames):
-    """M11's k-fold harness evaluates linear, forest, neural, SVC and
-    ensemble trainers through one probability interface."""
+    """M11's k-fold harness evaluates every registry family (linear,
+    forest, neural, SVC and ensembles) through one probability
+    interface."""
     _, features, labeled = fixture_frames
-    trainers = [
-        clf.train_logistic,
-        clf.train_naive_bayes,
-        lambda X, y: clf.train_random_forest(X, y, n_trees=10),
-        lambda X, y: clf.train_slp(X, y, epochs=80),
-        lambda X, y: clf.train_svc(X, y),
-    ]
-    for t in trainers:
-        out = ev.kfold_scores(features, labeled, k=3, trainer=t)
-        assert out["f1"] >= 0.9, out
+    for name in clf.TRAINERS:
+        out = ev.kfold_scores(features, labeled, k=3, trainer=_small(name))
+        assert out["f1"] >= 0.9, (name, out)
 
 
 def test_mlp_backprop_matches_finite_differences():

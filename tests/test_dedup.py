@@ -514,18 +514,21 @@ def test_exact_mode_bounds_pinned_checkpoints(spark):
         "doc_id long, tokens array<string>",
     )
     corpus = spark.createDataFrame([], "doc_id long, tokens array<string>")
-    jsc = spark.sparkContext._jsc.sc()
-    before = jsc.getPersistentRDDs().size()
+
+    def pinned_ids():  # ids, not a count: the GC may drop older pins
+        return set(spark.sparkContext._jsc.getPersistentRDDs())
+
+    before = pinned_ids()
     incremental_minhash_neardup(
         new, corpus, jaccard_threshold=0.7, within_batch="exact"
     ).collect()
-    after = jsc.getPersistentRDDs().size()
-    assert after <= before + 3, (before, after)
+    new_ids = pinned_ids() - before
+    assert len(new_ids) <= 3, new_ids
 
     # joins path (max_component_edges=0, the round-6 ADVICE item): the
     # greedy rounds release the input edges and every per-round state;
     # only the returned id-only drop frame may stay pinned per call
-    before = jsc.getPersistentRDDs().size()
+    before = pinned_ids()
     incremental_minhash_neardup(
         new,
         corpus,
@@ -533,15 +536,12 @@ def test_exact_mode_bounds_pinned_checkpoints(spark):
         within_batch="exact",
         max_component_edges=0,
     ).collect()
-    after = jsc.getPersistentRDDs().size()
-    assert after <= before + 3, (before, after)
+    new_ids = pinned_ids() - before
+    assert len(new_ids) <= 3, new_ids
 
     # inside a pin scope (what a stage or a per-batch loop opens) nothing
     # outlives the scope, on either greedy path
     from soweego_spark.operators import pins
-
-    def pinned_ids():  # ids, not a count: the GC may drop older pins
-        return set(spark.sparkContext._jsc.getPersistentRDDs())
 
     for cap in (1_000_000, 0):
         before = pinned_ids()

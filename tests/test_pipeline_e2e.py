@@ -17,16 +17,20 @@ def fixture():
     return generate_pages(250, seed=42)
 
 
-@pytest.fixture(scope="module")
-def result(spark, fixture):
+def _run(spark, fixture, **config):
     pages = spark.createDataFrame(fixture.pages)
     labeled = spark.createDataFrame(fixture.labeled_pairs)
     closure = {
         row.code: list(row.related)
         for row in spark.createDataFrame(fixture.occupation_closure).collect()
     }
-    cfg = PipelineConfig(occupation_closure=closure)
+    cfg = PipelineConfig(occupation_closure=closure, **config)
     return run_pipeline(spark, pages, labeled, cfg)
+
+
+@pytest.fixture(scope="module")
+def result(spark, fixture):
+    return _run(spark, fixture)
 
 
 def test_blocking_recall_on_labeled_positives(spark, fixture, result):
@@ -79,6 +83,16 @@ def test_all_pages_assigned_to_exactly_one_cluster(result, fixture):
     n_pages = len(fixture.pages)
     assert result.clusters.count() == n_pages
     assert result.clusters.select("url").distinct().count() == n_pages
+
+
+def test_pipeline_runs_a_broadcast_scored_model(spark, fixture):
+    """A model with no Catalyst form (the forest) runs through the same
+    pipeline: scored by the broadcast UDF, its stages keyed on the model."""
+    res = _run(spark, fixture, classifier="random_forest")
+    n_pages = len(fixture.pages)
+    assert res.clusters.count() == n_pages
+    assert res.clusters.select("url").distinct().count() == n_pages
+    assert res.metrics["f1"] >= 0.99, res.metrics
 
 
 def test_pipeline_survives_degenerate_pages(spark):
