@@ -39,11 +39,17 @@ Why one key index and not a self-join per family: under AQE the two
 sides of a self-join and each family's hot-key broadcast plan as separate
 subtrees with no exchange reuse, so three families cost three times the
 scans, exchanges and jobs of one graph.
+
+Build cost: the graph's fixed expressions are SQL text over column names
+(``selectExpr``, ``F.expr``, string filters), one py4j call each, where
+the same Column ops cost ~5 each (CLAUDE.md); ``block_candidates`` builds
+in ~390 py4j calls instead of ~2,000. The MinHash signature stays a Column
+expression, since ``lsh_blocking`` takes any ``text_expr`` Column.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 URL_DF_CAP = 50
@@ -53,42 +59,41 @@ BAND_CAP = 200
 _TOKEN, _URL, _LSH = 0, 1, 2
 
 
-def _key_index(sig: DataFrame, families: list[tuple[int, object]]) -> DataFrame:
-    """(url, family, key) rows: one explode of every family's key array.
+def _key_index(sig: DataFrame, families: list[tuple[int, str]]) -> DataFrame:
+    """(url, family, key) rows: one explode of every family's key array
+    column.
 
     A null array contributes no keys and a null element pairs nothing, as
     in an equi-join on the key."""
     arrays = [
-        F.coalesce(keys, F.array().cast("array<string>"))
+        f"coalesce({keys}, CAST(array() AS ARRAY<STRING>))"
         for _, keys in families
     ]
     # posexplode of the concatenated arrays; the position says which
     # family an element came from (no per-element tagging lambda)
-    family = F.lit(families[-1][0])
-    bound = F.lit(0)
+    bound = "0"
     bounds = []
     for i, arr in enumerate(arrays[:-1]):
-        bound = bound + F.size(arr)
-        bounds.append(bound.alias(f"_b{i}"))
+        bound = f"({bound} + size({arr}))"
+        bounds.append(f"{bound} AS _b{i}")
+    family = str(families[-1][0])
     for i in reversed(range(len(arrays) - 1)):
-        family = F.when(F.col("pos") < F.col(f"_b{i}"), families[i][0]).otherwise(
-            family
-        )
-    idx = sig.select(
-        "url", *bounds, F.posexplode(F.concat(*arrays)).alias("pos", "key")
+        family = f"CASE WHEN pos < _b{i} THEN {families[i][0]} ELSE {family} END"
+    idx = sig.selectExpr(
+        "url", *bounds, f"posexplode(concat({', '.join(arrays)})) AS (pos, key)"
     )
-    return idx.filter(F.col("key").isNotNull()).select(
-        "url", family.alias("family"), "key"
+    return idx.filter("key IS NOT NULL").selectExpr(
+        "url", f"{family} AS family", "key"
     )
 
 
 def _block_graph(
     sig: DataFrame,
-    families: list[tuple[int, object, int]],
+    families: list[tuple[int, str, int]],
     top_k: int = 0,
 ) -> DataFrame:
     """Candidate pairs from capped posting lists of ``families``
-    (``(family id, array<string> key column, df cap)`` each).
+    (``(family id, array<string> key column name, df cap)`` each).
 
     Returns (url_a, url_b, shared_tokens), url_a < url_b, distinct. When
     the token family takes part, token pairs are kept only within each
@@ -96,39 +101,36 @@ def _block_graph(
     """
     idx = _key_index(sig, [(fam, keys) for fam, keys, _ in families])
 
-    cap = F.lit(None)
+    cap = "NULL"
     for fam, _, df_cap in families:
-        cap = F.when(F.col("family") == fam, df_cap).otherwise(cap)
+        cap = f"CASE WHEN family = {fam} THEN {df_cap} ELSE {cap} END"
     hot = (
         idx.groupBy("family", "key")
-        .agg(F.count("*").alias("df"))
-        .filter(F.col("df") > cap)
+        .agg(F.expr("count(*) AS df"))
+        .filter(f"df > {cap}")
         .select("family", "key")
     )
     lists = (
         idx.join(F.broadcast(hot), ["family", "key"], "left_anti")
         .groupBy("family", "key")
-        .agg(F.array_sort(F.collect_list("url")).alias("urls"))
+        .agg(F.expr("array_sort(collect_list(url)) AS urls"))
     )
     # every (i < j) position pair of the sorted list; a url listed twice
     # under one key (a repeated token) pairs with others once per copy
-    in_list = F.flatten(
-        F.transform(
-            "urls",
-            lambda a, i: F.transform(
-                F.slice("urls", i + 2, F.size("urls") - i - 1),
-                lambda b: F.struct(a.alias("url_a"), b.alias("url_b")),
-            ),
-        )
+    in_list = (
+        "flatten(transform(urls, (list_a, list_i) -> transform("
+        "slice(urls, list_i + 2, size(urls) - list_i - 1), "
+        "list_b -> struct(list_a AS url_a, list_b AS url_b))))"
     )
     pairs = (
-        lists.select("family", F.explode(in_list).alias("p"))
+        lists.selectExpr("family", f"explode({in_list}) AS p")
         .select("family", "p.url_a", "p.url_b")
-        .filter(F.col("url_a") < F.col("url_b"))
+        .filter("url_a < url_b")
         .groupBy("url_a", "url_b")
         .agg(
-            F.count(F.when(F.col("family") == _TOKEN, 1)).alias("shared_tokens"),
-            F.max(F.col("family") != _TOKEN).alias("other_hit"),
+            F.expr(f"count(CASE WHEN family = {_TOKEN} THEN 1 END) "
+                   "AS shared_tokens"),
+            F.expr(f"max(family != {_TOKEN}) AS other_hit"),
         )
     )
     if _TOKEN not in [fam for fam, _, _ in families]:
@@ -145,37 +147,28 @@ def _block_graph(
     # keeps the WindowGroupLimit per-partition top-k pushdown, which trims
     # the window shuffle map-side.
     def row(key, other, direction, own, use):
-        return F.struct(
-            F.col(key).alias("key"),
-            F.col(other).alias("other"),
-            F.lit(direction).alias("dir"),
-            own.alias("own"),
-            F.col("shared_tokens"),
-            use.alias("use"),
+        return (
+            f"struct({key} AS key, {other} AS other, '{direction}' AS dir, "
+            f"{own} AS own, shared_tokens, {use} AS use)"
         )
 
-    token_hit = F.col("shared_tokens") > 0
-    none = F.lit(None).cast("string")
-    rows = pairs.select(
-        F.explode(
-            F.array(
-                row("url_a", "url_b", "gt", none, token_hit),
-                row("url_b", "url_a", "lt", none, token_hit),
-                row("url_a", "url_b", "gt", F.col("url_b"), F.col("other_hit")),
-            )
-        ).alias("e")
+    token_hit = "shared_tokens > 0"
+    none = "CAST(NULL AS STRING)"
+    rows = pairs.selectExpr(
+        "explode(array({}, {}, {})) AS e".format(
+            row("url_a", "url_b", "gt", none, token_hit),
+            row("url_b", "url_a", "lt", none, token_hit),
+            row("url_a", "url_b", "gt", "url_b", "other_hit"),
+        )
     ).filter("e.use").select("e.key", "e.other", "e.dir", "e.own", "e.shared_tokens")
-    w = Window.partitionBy("key", "dir", "own").orderBy(
-        F.desc("shared_tokens"), F.asc("other")
-    )
-    kept = rows.withColumn("rn", F.row_number().over(w)).filter(
-        F.col("rn") <= top_k
-    )
-    gt = F.col("dir") == "gt"
+    kept = rows.withColumn("rn", F.expr(
+        "row_number() OVER (PARTITION BY key, dir, own "
+        "ORDER BY shared_tokens DESC, other ASC)"
+    )).filter(f"rn <= {top_k}")
     # a pair kept from more than one partition appears more than once
-    return kept.select(
-        F.when(gt, F.col("key")).otherwise(F.col("other")).alias("url_a"),
-        F.when(gt, F.col("other")).otherwise(F.col("key")).alias("url_b"),
+    return kept.selectExpr(
+        "CASE WHEN dir = 'gt' THEN key ELSE other END AS url_a",
+        "CASE WHEN dir = 'gt' THEN other ELSE key END AS url_b",
         "shared_tokens",
     ).distinct()
 
@@ -191,14 +184,12 @@ def token_blocking(
     Returns (url_a, url_b, shared_tokens) — ``shared_tokens`` is the rank
     score (reference: FTS relevance).
     """
-    return _block_graph(
-        sig, [(_TOKEN, F.col(token_col), token_df_cap)], top_k=top_k
-    )
+    return _block_graph(sig, [(_TOKEN, token_col, token_df_cap)], top_k=top_k)
 
 
 def url_blocking(sig: DataFrame, url_df_cap: int = URL_DF_CAP) -> DataFrame:
     """Documents sharing an exact outbound URL."""
-    return _block_graph(sig, [(_URL, F.col("urls"), url_df_cap)]).select(
+    return _block_graph(sig, [(_URL, "urls", url_df_cap)]).select(
         "url_a", "url_b"
     )
 
@@ -251,21 +242,14 @@ def _with_band_keys(
     if text_expr is None:
         text_expr = F.array_join(F.col("name"), " ")
     mh = minhash_signature(shingles(text_expr, shingle_size), num_hashes)
-    bands = F.array(
-        *[
-            F.concat(
-                F.lit(f"{b}:"),
-                F.hash(
-                    *[
-                        F.element_at("_mh", b * rows_per_band + r + 1)
-                        for r in range(rows_per_band)
-                    ]
-                ).cast("string"),
-            )
-            for b in range(num_hashes // rows_per_band)
-        ]
-    )
-    return sig.withColumn("_mh", mh).withColumn("_bands", bands)
+    bands = "array({})".format(", ".join(
+        "concat('{}:', CAST(hash({}) AS STRING))".format(b, ", ".join(
+            f"element_at(_mh, {b * rows_per_band + r + 1})"
+            for r in range(rows_per_band)
+        ))
+        for b in range(num_hashes // rows_per_band)
+    ))
+    return sig.withColumn("_mh", mh).withColumn("_bands", F.expr(bands))
 
 
 def lsh_blocking(
@@ -283,7 +267,7 @@ def lsh_blocking(
     (misspellings change tokens but only a few shingles).
     """
     sig = _with_band_keys(sig, text_expr, num_hashes, rows_per_band, shingle_size)
-    return _block_graph(sig, [(_LSH, F.col("_bands"), band_cap)]).select(
+    return _block_graph(sig, [(_LSH, "_bands", band_cap)]).select(
         "url_a", "url_b"
     )
 
@@ -298,12 +282,12 @@ def block_candidates(
 ) -> DataFrame:
     """All blocking keys in one block graph -> distinct candidate pairs
     (url_a, url_b) with url_a < url_b."""
-    families = [(_TOKEN, F.col("name_tokens"), token_df_cap)]
+    families = [(_TOKEN, "name_tokens", token_df_cap)]
     if use_url_key:
-        families.append((_URL, F.col("urls"), URL_DF_CAP))
+        families.append((_URL, "urls", URL_DF_CAP))
     if use_lsh:
         sig = _with_band_keys(sig, rows_per_band=lsh_rows_per_band)
-        families.append((_LSH, F.col("_bands"), BAND_CAP))
+        families.append((_LSH, "_bands", BAND_CAP))
     return _block_graph(sig, families, top_k=top_k).select("url_a", "url_b")
 
 

@@ -34,6 +34,14 @@ tests/test_features_jvm.py asserts expression == kernel on fixture pairs):
                comparison over the parsed date structs (features.py:318-403)
 
 Missing values fill with FEATURE_MISSING_VALUE = 0.0 (constants.py:359).
+
+Build cost: under PySpark 4 a Column operation is about five py4j round
+trips (``F.col`` thirteen) and ``isin(list)`` one more per element, so
+every feature expression, the URL stop-word, band-word and
+occupation-closure literals included, is SQL text over column names,
+parsed by the JVM in one call (``F.expr``). As Column ops the eleven
+features were ~5,100 round trips per build and the URL stop-word filter
+~3,700 (PERF.md).
 """
 
 from __future__ import annotations
@@ -78,19 +86,18 @@ def assemble_pairs(
       literal per row per side and alone was ~80%% of featurize wall time.
     * ``occupations_exp`` — C6's class-closure expansion (broadcast map
       literal), equally pair-invariant.
+    * ``name_tokens_band`` — the name tokens among C5's band words,
+      equally pair-invariant.
     """
     # Only what compute_features reads: raw description/description_tokens
     # stay OUT of the pair shuffle (desc_cos consumes the precomputed
     # desc_terms maps) — at 10^12 docs the description text would dominate
     # shuffle volume for zero benefit.
-    url_stop = sorted(URL_STOPWORDS)
-    band_words = sorted(simkernels.BAND_LOW_SCORE_WORDS)
     sig = sig.withColumn(
-        "url_tokens_nostop",
-        F.filter(F.col("url_tokens"), lambda t: ~t.isin(url_stop)),
+        "url_tokens_nostop", F.expr(_without_url_stopwords("url_tokens"))
     ).withColumn(
         "occupations_exp",
-        _expand_with_closure(F.col("occupations"), occupation_closure or {}),
+        F.expr(_expand_with_closure("occupations", occupation_closure or {})),
     ).withColumn(
         # C5's band penalty hoisted to the document side (r7):
         # |a∩b∩band| == |(a∩band) ∩ (b∩band)|, so intersecting each
@@ -98,8 +105,7 @@ def assemble_pairs(
         # probe, no literal array) replaces a per-PAIR intersect against
         # a literal array rebuilt per row (pairs outnumber docs ~20x) —
         # same family as the url_tokens_nostop hoist above.
-        "name_tokens_band",
-        F.filter(F.col("name_tokens"), lambda t: t.isin(band_words)),
+        "name_tokens_band", F.expr(_band_tokens("name_tokens"))
     )
     feature_cols = [
         "name", "name_tokens", "name_tokens_band", "urls",
@@ -107,28 +113,74 @@ def assemble_pairs(
         "born_p", "died_p", "occupations_exp", "genres",
         "name_bigrams", "name_bigram_norm", "desc_terms", "desc_norm",
     ]
-    feature_cols = [c for c in feature_cols if c in sig.columns]
-    a = sig.select(
-        F.col("url").alias("url_a"),
-        *[F.col(c).alias(f"a_{c}") for c in feature_cols],
-    )
-    b = sig.select(
-        F.col("url").alias("url_b"),
-        *[F.col(c).alias(f"b_{c}") for c in feature_cols],
-    )
+    have = set(sig.columns)
+    feature_cols = [c for c in feature_cols if c in have]
+    a = sig.selectExpr("url AS url_a", *[f"{c} AS a_{c}" for c in feature_cols])
+    b = sig.selectExpr("url AS url_b", *[f"{c} AS b_{c}" for c in feature_cols])
     return pairs.join(a, "url_a").join(b, "url_b")
 
 
-def _exact_list_match(a, b):
+def _sql_string(s: str) -> str:
+    """``s`` as a Spark SQL string literal (backslash escapes, the
+    default ``spark.sql.parser.escapedStringLiterals=false``)."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def _sql_in_list(words) -> str:
+    """``'w1', 'w2', ...``: the body of an SQL ``IN (...)`` or
+    ``array(...)``."""
+    return ", ".join(_sql_string(w) for w in words)
+
+
+# The feature expressions below are SQL text over column names: each is
+# parsed by the JVM in one py4j call (CLAUDE.md). Literal word lists plan
+# to the same InSet as ``isin`` after OptimizeIn. Every lambda variable is
+# named after the column it ranges over, so that no two in one projection
+# share a name: same-named sibling lambdas can be mis-bound (CLAUDE.md).
+_URL_STOP_SQL = _sql_in_list(sorted(URL_STOPWORDS))
+_BAND_SQL = _sql_in_list(sorted(simkernels.BAND_LOW_SCORE_WORDS))
+_MISSING = f"{FEATURE_MISSING_VALUE!r}D"  # a DOUBLE literal
+_NULL = "CAST(NULL AS DOUBLE)"
+
+
+def _or(*conds: str) -> str:
+    """``conds`` OR-ed left to right, as Column ``|`` chains them (the SQL
+    parser would balance an unparenthesized chain)."""
+    out = conds[0]
+    for c in conds[1:]:
+        out = f"({out} OR {c})"
+    return out
+
+
+def _empty(a: str, b: str) -> str:
+    """Either side null or empty."""
+    return _or(f"{a} IS NULL", f"{b} IS NULL", f"size({a}) = 0",
+               f"size({b}) = 0")
+
+
+def _without_url_stopwords(col: str) -> str:
+    """Column ``col`` without the URL stop words."""
+    v = f"{col}_t"
+    return f"filter({col}, {v} -> NOT {v} IN ({_URL_STOP_SQL}))"
+
+
+def _band_tokens(col: str) -> str:
+    """Column ``col`` ∩ the C5 band words (``BAND_LOW_SCORE_WORDS``)."""
+    v = f"{col}_b"
+    return f"filter({col}, {v} -> {v} IN ({_BAND_SQL}))"
+
+
+def _exact_list_match(a: str, b: str) -> str:
     """C1: max over cross-product equality == arrays_overlap; null/empty ->
     missing value."""
-    return F.when(
-        a.isNull() | b.isNull() | (F.size(a) == 0) | (F.size(b) == 0),
-        F.lit(FEATURE_MISSING_VALUE),
-    ).otherwise(F.arrays_overlap(a, b).cast("double"))
+    return (
+        f"CASE WHEN {_empty(a, b)} THEN {_MISSING} "
+        f"ELSE CAST(arrays_overlap({a}, {b}) AS DOUBLE) END"
+    )
 
 
-def _shared_tokens(a, b, band_words: list[str], band_precomp=None):
+def _shared_tokens(a: str, b: str, band_words: list[str],
+                   band_precomp: tuple[str, str] | None = None) -> str:
     """C5: (|∩| - 0.9*|∩ ∩ band_words|) / |∪| with set semantics.
 
     ``band_precomp`` — per-side precomputed ``tokens ∩ band_words`` arrays
@@ -137,79 +189,64 @@ def _shared_tokens(a, b, band_words: list[str], band_precomp=None):
     The null guard tests ``size(a)==0 AND size(b)==0`` rather than
     ``size(union)==0`` (equivalent for non-null sides) so the union array
     is built once per pair, not twice."""
-    inter = F.array_intersect(a, b)
-    union = F.array_union(a, b)
+    inter = f"array_intersect({a}, {b})"
     if band_precomp is not None:
-        penalty = F.size(F.array_intersect(*band_precomp))
+        penalty = "size(array_intersect({}, {}))".format(*band_precomp)
     elif band_words:
-        penalty = F.size(
-            F.array_intersect(inter, F.array(*[F.lit(w) for w in band_words]))
+        penalty = (
+            f"size(array_intersect({inter}, "
+            f"array({_sql_in_list(band_words)})))"
         )
     else:
-        penalty = F.lit(0)
-    score = (F.size(inter) - penalty * F.lit(0.9)) / F.size(union)
-    return F.when(
-        a.isNull() | b.isNull() | ((F.size(a) == 0) & (F.size(b) == 0)),
-        F.lit(FEATURE_MISSING_VALUE),
-    ).otherwise(F.coalesce(score, F.lit(FEATURE_MISSING_VALUE)))
-
-
-def _shared_ratio_min(a, b):
-    """C6/C7 core: |∩| / min(|a|,|b|)."""
-    smallest = F.least(F.size(a), F.size(b))
-    return F.when(
-        a.isNull() | b.isNull() | (smallest <= 0),
-        F.lit(FEATURE_MISSING_VALUE),
-    ).otherwise(F.size(F.array_intersect(a, b)) / smallest)
-
-
-def _expand_with_closure(col, closure: dict[str, list[str]]):
-    """Occupation class-closure expansion as a broadcast map literal."""
-    if not closure:
-        return col
-    entries = []
-    for code, related in closure.items():
-        entries.append(
-            F.struct(
-                F.lit(code).alias("key"),
-                F.array(*[F.lit(r) for r in related]).alias("value"),
-            )
-        )
-    closure_map = F.map_from_entries(F.array(*entries))
-    return F.when(col.isNull(), None).otherwise(
-        F.array_distinct(
-            F.flatten(
-                F.filter(
-                    F.transform(
-                        col,
-                        lambda c: F.coalesce(
-                            closure_map.getItem(c), F.array(c)
-                        ),
-                    ),
-                    lambda arr: arr.isNotNull(),
-                )
-            )
-        )
+        penalty = "0"
+    score = f"(size({inter}) - {penalty} * 0.9D) / size(array_union({a}, {b}))"
+    both_empty = f"(size({a}) = 0 AND size({b}) = 0)"
+    return (
+        f"CASE WHEN {_or(f'{a} IS NULL', f'{b} IS NULL', both_empty)} "
+        f"THEN {_MISSING} "
+        f"ELSE coalesce({score}, {_MISSING}) END"
     )
 
 
+def _shared_ratio_min(a: str, b: str) -> str:
+    """C6/C7 core: |∩| / min(|a|,|b|)."""
+    smallest = f"least(size({a}), size({b}))"
+    return (
+        f"CASE WHEN {_or(f'{a} IS NULL', f'{b} IS NULL', f'{smallest} <= 0')} "
+        f"THEN {_MISSING} "
+        f"ELSE size(array_intersect({a}, {b})) / {smallest} END"
+    )
 
 
-def _lev_max_expr(a, b):
+def _expand_with_closure(col: str, closure: dict[str, list[str]]) -> str:
+    """Occupation class-closure expansion of column ``col`` as a broadcast
+    map literal."""
+    if not closure:
+        return col
+    closure_map = "map_from_entries(array({}))".format(", ".join(
+        f"named_struct('key', {_sql_string(code)}, "
+        f"'value', array({_sql_in_list(related)}))"
+        for code, related in closure.items()
+    ))
+    c, arr = f"{col}_c", f"{col}_arr"
+    return (
+        f"CASE WHEN {col} IS NULL THEN NULL ELSE array_distinct(flatten("
+        f"filter(transform({col}, {c} -> coalesce({closure_map}[{c}], "
+        f"array({c}))), {arr} -> {arr} IS NOT NULL))) END"
+    )
+
+
+def _lev_max_expr(a: str, b: str) -> str:
     """C2: max over the token cross product of ``1 - lev/max(len)`` — the
     built-in ``levenshtein`` inside nested transforms (whole-stage codegen;
     oracle: simkernels.levenshtein_max)."""
-
-    def one(x, y):
-        longest = F.greatest(F.length(x), F.length(y))
-        return F.when(x.isNull() | y.isNull(), F.lit(0.0)).otherwise(
-            F.when(longest == 0, F.lit(1.0)).otherwise(
-                F.lit(1.0) - F.levenshtein(x, y) / longest
-            )
-        )
-
-    scores = F.flatten(F.transform(a, lambda x: F.transform(b, lambda y: one(x, y))))
-    full = F.array_max(scores)
+    x, y = f"{a}_x", f"{b}_y"
+    longest = f"greatest(length({x}), length({y}))"
+    one = (
+        f"CASE WHEN {_or(f'{x} IS NULL', f'{y} IS NULL')} THEN 0.0D "
+        f"ELSE CASE WHEN {longest} = 0 THEN 1.0D "
+        f"ELSE 1.0D - levenshtein({x}, {y}) / {longest} END END"
+    )
     # Exact-equality short-circuit for the max-Levenshtein cross product:
     # any shared token scores 1.0, the maximum possible, so the whole
     # quadratic Levenshtein evaluation can be skipped for pairs whose
@@ -218,55 +255,52 @@ def _lev_max_expr(a, b):
     # construction (1.0 either way, so the pair_features hash gate pins
     # it). CaseWhen evaluates lazily: the cross product only runs for
     # pairs with NO shared token.
-    full = F.when(F.arrays_overlap(a, b), F.lit(1.0)).otherwise(full)
-    return F.when(
-        a.isNull() | b.isNull() | (F.size(a) == 0) | (F.size(b) == 0),
-        F.lit(None).cast("double"),
-    ).otherwise(full)
+    full = (
+        f"CASE WHEN arrays_overlap({a}, {b}) THEN 1.0D ELSE array_max("
+        f"flatten(transform({a}, {x} -> transform({b}, {y} -> {one})))) END"
+    )
+    return f"CASE WHEN {_empty(a, b)} THEN {_NULL} ELSE {full} END"
 
 
-def _cosine_map_expr(ma, na, mb, nb):
+def _cosine_map_expr(ma: str, na: str, mb: str, nb: str) -> str:
     """C3: cosine between two precomputed bag-of-words count maps.
 
-    ``map_zip_with`` unions the key sets; missing counts coalesce to 0, so
-    the aggregate over values is exactly the sparse dot product. Norms were
-    taken at extract time (oracle: simkernels.cosine_bow)."""
+    Norms were taken at extract time (oracle: simkernels.cosine_bow)."""
     # Iterate the left map's entries and probe the right map — exactly the
     # sparse dot product, but O(|ma|) with O(1) lookups instead of
     # materializing the |ma ∪ mb| zipped map (terms missing on either side
     # contribute 0 anyway).
-    dot = F.aggregate(
-        F.map_entries(ma),
-        F.lit(0).cast("long"),
-        lambda acc, e: acc
-        + e["value"].cast("long")
-        * F.coalesce(F.element_at(mb, e["key"]), F.lit(0)).cast("long"),
-    ).cast("double")
-    return F.when(
-        ma.isNull() | mb.isNull() | na.isNull() | nb.isNull()
-        | (na == 0) | (nb == 0),
-        F.lit(None).cast("double"),
-    ).otherwise(dot / (na * nb))
+    acc, e = f"{ma}_acc", f"{ma}_e"
+    dot = (
+        f"CAST(aggregate(map_entries({ma}), CAST(0 AS BIGINT), "
+        f"({acc}, {e}) -> {acc} + CAST({e}.value AS BIGINT) "
+        f"* CAST(coalesce(element_at({mb}, {e}.key), 0) AS BIGINT)) "
+        f"AS DOUBLE)"
+    )
+    missing = _or(*[f"{c} IS NULL" for c in (ma, mb, na, nb)],
+                  f"{na} = 0", f"{nb} = 0")
+    return f"CASE WHEN {missing} THEN {_NULL} ELSE {dot} / ({na} * {nb}) END"
 
 
 _DATE_ATTRS = ["y", "mo", "d", "h", "mi", "s"]
 
 
-def _date_pair_score_one(lv, rv):
+def _date_pair_score_one(lv: str, rv: str) -> str:
     """SimilarDates core for ONE (date, date) combination: count consecutive
     equal attributes from year down to the shared precision depth, stop at
     the first mismatch, divide by shared+1 (oracle: dates.date_pair_score)."""
-    shared = F.least(lv["depth"], rv["depth"])
-    matched = F.lit(0)
+    shared = f"least({lv}.depth, {rv}.depth)"
+    matched = "0"
     for i in reversed(range(len(_DATE_ATTRS))):
-        eq = lv[_DATE_ATTRS[i]] == rv[_DATE_ATTRS[i]]
-        matched = F.when(
-            (shared >= i) & eq, F.lit(1) + matched
-        ).otherwise(F.lit(0))
-    return matched.cast("double") / (shared + F.lit(1)).cast("double")
+        attr = _DATE_ATTRS[i]
+        matched = (
+            f"CASE WHEN {shared} >= {i} AND {lv}.{attr} = {rv}.{attr} "
+            f"THEN 1 + {matched} ELSE 0 END"
+        )
+    return f"CAST({matched} AS DOUBLE) / CAST({shared} + 1 AS DOUBLE)"
 
 
-def _date_sim_expr(a, b):
+def _date_sim_expr(a: str, b: str) -> str:
     """C4: best cross-product score; null list elements contribute nothing
     (array_max skips the nulls their comparison produces).
 
@@ -277,20 +311,18 @@ def _date_sim_expr(a, b):
     by construction (array_max of a singleton is its element; a null
     element's score is null in both forms and coalesces to 0.0).
     CaseWhen evaluates lazily, so only one branch runs per row."""
-    scores = F.flatten(
-        F.transform(a, lambda lv: F.transform(b, lambda rv: _date_pair_score_one(lv, rv)))
+    lv, rv = f"{a}_l", f"{b}_r"
+    one = _date_pair_score_one(f"element_at({a}, 1)", f"element_at({b}, 1)")
+    scores = (
+        f"flatten(transform({a}, {lv} -> transform({b}, {rv} -> "
+        f"{_date_pair_score_one(lv, rv)})))"
     )
-    best = F.when(
-        (F.size(a) == 1) & (F.size(b) == 1),
-        F.coalesce(
-            _date_pair_score_one(F.element_at(a, 1), F.element_at(b, 1)),
-            F.lit(0.0),
-        ),
-    ).otherwise(F.coalesce(F.array_max(scores), F.lit(0.0)))
-    return F.when(
-        a.isNull() | b.isNull() | (F.size(a) == 0) | (F.size(b) == 0),
-        F.lit(None).cast("double"),
-    ).otherwise(best)
+    best = (
+        f"CASE WHEN size({a}) = 1 AND size({b}) = 1 "
+        f"THEN coalesce({one}, 0.0D) "
+        f"ELSE coalesce(array_max({scores}), 0.0D) END"
+    )
+    return f"CASE WHEN {_empty(a, b)} THEN {_NULL} ELSE {best} END"
 
 
 RULE_COLUMNS = [
@@ -345,73 +377,49 @@ def compute_features(
     wide pair rows — caching the wide rows themselves costs more to
     serialize than it saves (measured 28s vs 10s at 500k pairs).
     """
-    band_words = sorted(simkernels.BAND_LOW_SCORE_WORDS)
-
-    if "a_occupations_exp" in pair_rows.columns:
-        a_occ, b_occ = F.col("a_occupations_exp"), F.col("b_occupations_exp")
+    cols = set(pair_rows.columns)
+    if "a_occupations_exp" in cols:
+        a_occ, b_occ = "a_occupations_exp", "b_occupations_exp"
     else:
-        a_occ = _expand_with_closure(
-            F.col("a_occupations"), occupation_closure or {}
-        )
-        b_occ = _expand_with_closure(
-            F.col("b_occupations"), occupation_closure or {}
-        )
-    if "a_url_tokens_nostop" in pair_rows.columns:
-        a_ut = F.col("a_url_tokens_nostop")
-        b_ut = F.col("b_url_tokens_nostop")
+        a_occ = _expand_with_closure("a_occupations", occupation_closure or {})
+        b_occ = _expand_with_closure("b_occupations", occupation_closure or {})
+    if "a_url_tokens_nostop" in cols:
+        a_ut, b_ut = "a_url_tokens_nostop", "b_url_tokens_nostop"
     else:
-        url_stop = sorted(URL_STOPWORDS)
-        a_ut = F.filter(F.col("a_url_tokens"), lambda t: ~t.isin(url_stop))
-        b_ut = F.filter(F.col("b_url_tokens"), lambda t: ~t.isin(url_stop))
+        a_ut = _without_url_stopwords("a_url_tokens")
+        b_ut = _without_url_stopwords("b_url_tokens")
+    band = ("a_name_tokens_band", "b_name_tokens_band")
 
     carried = (
-        [c for c in RULE_COLUMNS if c in pair_rows.columns]
-        if carry_rule_cols
-        else []
+        [c for c in RULE_COLUMNS if c in cols] if carry_rule_cols else []
     )
-    features = [
-        _exact_list_match(F.col("a_name"), F.col("b_name")).alias(
-            "name_exact"
+    features = {
+        "name_exact": _exact_list_match("a_name", "b_name"),
+        "name_lev": _lev_max_expr("a_name_tokens", "b_name_tokens"),
+        "name_cos": _cosine_map_expr(
+            "a_name_bigrams", "a_name_bigram_norm",
+            "b_name_bigrams", "b_name_bigram_norm",
         ),
-        _lev_max_expr(F.col("a_name_tokens"), F.col("b_name_tokens")).alias(
-            "name_lev"
+        "name_shared": _shared_tokens(
+            "a_name_tokens", "b_name_tokens",
+            sorted(simkernels.BAND_LOW_SCORE_WORDS),
+            band_precomp=band if band[0] in cols else None,
         ),
-        _cosine_map_expr(
-            F.col("a_name_bigrams"), F.col("a_name_bigram_norm"),
-            F.col("b_name_bigrams"), F.col("b_name_bigram_norm"),
-        ).alias("name_cos"),
-        _shared_tokens(
-            F.col("a_name_tokens"), F.col("b_name_tokens"), band_words,
-            band_precomp=(
-                (F.col("a_name_tokens_band"), F.col("b_name_tokens_band"))
-                if "a_name_tokens_band" in pair_rows.columns
-                else None
-            ),
-        ).alias("name_shared"),
-        _exact_list_match(F.col("a_urls"), F.col("b_urls")).alias(
-            "url_exact"
+        "url_exact": _exact_list_match("a_urls", "b_urls"),
+        "url_tok_shared": _shared_ratio_min(a_ut, b_ut),
+        "born_sim": _date_sim_expr("a_born_p", "b_born_p"),
+        "died_sim": _date_sim_expr("a_died_p", "b_died_p"),
+        "desc_cos": _cosine_map_expr(
+            "a_desc_terms", "a_desc_norm", "b_desc_terms", "b_desc_norm",
         ),
-        _shared_ratio_min(a_ut, b_ut).alias("url_tok_shared"),
-        _date_sim_expr(F.col("a_born_p"), F.col("b_born_p")).alias(
-            "born_sim"
-        ),
-        _date_sim_expr(F.col("a_died_p"), F.col("b_died_p")).alias(
-            "died_sim"
-        ),
-        _cosine_map_expr(
-            F.col("a_desc_terms"), F.col("a_desc_norm"),
-            F.col("b_desc_terms"), F.col("b_desc_norm"),
-        ).alias("desc_cos"),
-        _shared_ratio_min(a_occ, b_occ).alias("occ_shared"),
-        _shared_tokens(F.col("a_genres"), F.col("b_genres"), []).alias(
-            "genre_shared"
-        ),
-    ]
+        "occ_shared": _shared_ratio_min(a_occ, b_occ),
+        "genre_shared": _shared_tokens("a_genres", "b_genres", []),
+    }
     out = pair_rows.select(
         "url_a",
         "url_b",
         *carried,
-        *features,
+        *[F.expr(f"{sql} AS {name}") for name, sql in features.items()],
         *([name_jw_column().alias("name_jw")] if include_jw else []),
     )
     fill_cols = FEATURE_COLUMNS + (["name_jw"] if include_jw else [])

@@ -466,28 +466,26 @@ def golden_features(
     )
     rows = pairs.join(a, "qid").join(b, "tid")
     band_words = sorted(simkernels.BAND_LOW_SCORE_WORDS)
+    features = {
+        "name_exact": _exact_list_match("a_name", "b_name"),
+        # the reference compares raw list VALUES: wd tokens x the stored
+        # joined string (features.py:235-247)
+        "name_lev": _lev_max_expr("a_name_tokens", "b_name_tokens_joined"),
+        "name_cos": _cosine_map_expr(
+            "a_name_bigrams", "a_name_bigram_norm",
+            "b_name_bigrams", "b_name_bigram_norm",
+        ),
+        "name_shared": _shared_tokens(
+            "a_name_tokens", "b_name_tokens", band_words
+        ),
+        "born_sim": _date_sim_expr("a_born_p", "b_born_p"),
+        "died_sim": _date_sim_expr("a_died_p", "b_died_p"),
+        "occ_shared": _shared_ratio_min("a_occupations", "b_occupations"),
+    }
     out = rows.select(
         "qid",
         "tid",
-        _exact_list_match(F.col("a_name"), F.col("b_name"))
-        .alias("name_exact"),
-        # the reference compares raw list VALUES: wd tokens x the stored
-        # joined string (features.py:235-247)
-        _lev_max_expr(F.col("a_name_tokens"), F.col("b_name_tokens_joined"))
-        .alias("name_lev"),
-        _cosine_map_expr(
-            F.col("a_name_bigrams"), F.col("a_name_bigram_norm"),
-            F.col("b_name_bigrams"), F.col("b_name_bigram_norm"),
-        ).alias("name_cos"),
-        _shared_tokens(
-            F.col("a_name_tokens"), F.col("b_name_tokens"), band_words
-        ).alias("name_shared"),
-        _date_sim_expr(F.col("a_born_p"), F.col("b_born_p"))
-        .alias("born_sim"),
-        _date_sim_expr(F.col("a_died_p"), F.col("b_died_p"))
-        .alias("died_sim"),
-        _shared_ratio_min(F.col("a_occupations"), F.col("b_occupations"))
-        .alias("occ_shared"),
+        *[F.expr(f"{sql} AS {name}") for name, sql in features.items()],
         *(
             [_jw_column("a_name_tokens", "b_name_tokens_joined")
              .alias("name_jw")]

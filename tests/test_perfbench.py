@@ -1,6 +1,6 @@
 """Smoke test of the traced benchmark path: ``perfbench/run.py --trace 1``
-calls the library operators one by one (``Link.traced``), so an API break
-in any of them fails here, not only in a benchmark run."""
+calls the library operators one by one (``Link.traced``, ``Curate.traced``),
+so an API break in any of them fails here, not only in a benchmark run."""
 
 from __future__ import annotations
 
@@ -15,9 +15,10 @@ ROOT = Path(__file__).resolve().parents[1]
 
 
 @pytest.mark.slow
-def test_traced_link_run_exits_zero_with_json():
+@pytest.mark.parametrize("workload", ["link", "curate"])
+def test_traced_run_exits_zero_with_json(workload):
     proc = subprocess.run(
-        [sys.executable, "perfbench/run.py", "--workload", "link",
+        [sys.executable, "perfbench/run.py", "--workload", workload,
          "--seed", "3", "--seconds", "1", "--trace", "1"],
         cwd=ROOT, capture_output=True, text=True, timeout=900,
     )
