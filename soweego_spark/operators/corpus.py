@@ -31,7 +31,13 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from soweego_spark.operators import pins
-from soweego_spark.operators.dedup import explode_once, md5_60
+from soweego_spark.operators.dedup import (
+    explode_once,
+    md5_60,
+    md5_60_sql,
+    sql_string,
+    words_sql,
+)
 
 TWO_60 = float(1 << 60)
 
@@ -39,11 +45,8 @@ TWO_60 = float(1 << 60)
 def _words(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """(doc_id, w): filtered lowercase whitespace word list — the same
     tokenization every dedup operator uses."""
-    return docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.filter(
-            F.split(F.lower(F.col(text_col)), " "), lambda t: t != F.lit("")
-        ).alias("w"),
+    return docs.selectExpr(
+        f"{id_col} AS doc_id", f"{words_sql(text_col, 'cw_t')} AS w"
     )
 
 
@@ -70,13 +73,14 @@ def gram_occurrences(
     slice(w, 0, k) throws under ANSI wherever the transform is
     evaluated unguarded."""
     w = _words(docs, id_col, text_col)
-    hashes = F.transform(
-        F.sequence(F.lit(0), F.greatest(F.size("w") - k, F.lit(0))),
-        lambda i: md5_60(F.concat_ws(" ", F.slice("w", i + 1, k))),
+    gram = md5_60_sql(f"concat_ws(' ', slice(w, go_i + 1, {k}))")
+    hashes = (
+        f"transform(sequence(0, greatest(size(w) - {k}, 0)), go_i -> {gram})"
     )
-    empty = F.slice(F.array(F.lit(0).cast("long")), 1, 0)
-    ghs = w.select(
-        "doc_id", F.when(F.size("w") >= k, hashes).otherwise(empty).alias("ghs")
+    ghs = w.selectExpr(
+        "doc_id",
+        f"CASE WHEN size(w) >= {k} THEN {hashes} "
+        "ELSE slice(array(CAST(0 AS BIGINT)), 1, 0) END AS ghs",
     )
     return explode_once(ghs, ["doc_id"], "ghs", "gh", pos="s")
 
@@ -342,49 +346,37 @@ def pack_counts(
     one Exchange on the shard key, one per-shard window cumsum, one
     segment explode."""
     L = int(seq_len)
-    w = counts.select("doc_id", F.col("n").cast("long").alias("n")).where(
-        F.col("n") >= 1
-    )
-    shard = F.pmod(
-        md5_60(
-            F.concat_ws(":", F.lit(salt), F.col("doc_id").cast("string"))
-        ),
-        F.lit(n_shards),
-    ).cast("long")
-    win = Window.partitionBy("shard").orderBy("doc_id").rowsBetween(
-        Window.unboundedPreceding, -1
+    w = counts.selectExpr("doc_id", "CAST(n AS BIGINT) AS n").where("n >= 1")
+    shard = md5_60_sql(
+        f"concat_ws(':', {sql_string(salt)}, CAST(doc_id AS STRING))"
     )
     ofs = (
-        w.withColumn("shard", shard)
-        .withColumn("st", F.coalesce(F.sum("n").over(win), F.lit(0)))
-        .withColumn("en", F.col("st") + F.col("n"))
+        w.withColumn(
+            "shard", F.expr(f"CAST(pmod({shard}, {int(n_shards)}) AS BIGINT)")
+        )
+        .withColumn("st", F.expr(
+            "coalesce(sum(n) OVER (PARTITION BY shard ORDER BY doc_id "
+            "ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)"
+        ))
+        .withColumn("en", F.expr("st + n"))
     )
-    first = F.expr(f"st DIV {L}")
-    last = F.expr(f"(en - 1) DIV {L}")
-    seqs = ofs.select(
-        "shard",
-        "doc_id",
-        "st",
-        "en",
-        first.alias("f"),
-        F.greatest(last, first).alias("l"),
+    first = f"st DIV {L}"
+    seqs = ofs.selectExpr(
+        "shard", "doc_id", "st", "en", f"{first} AS f",
+        f"greatest((en - 1) DIV {L}, {first}) AS l",
     )
-    e = seqs.select(
-        "shard",
-        "doc_id",
-        "st",
-        "en",
-        F.explode(F.sequence("f", "l")).alias("seq_no"),
+    e = seqs.selectExpr(
+        "shard", "doc_id", "st", "en", "explode(sequence(f, l)) AS seq_no"
     )
-    seg_lo = F.greatest(F.col("st"), F.col("seq_no") * L)
-    seg_hi = F.least(F.col("en"), (F.col("seq_no") + 1) * L)
-    return e.select(
+    seg_lo = f"greatest(st, seq_no * {L})"
+    seg_hi = f"least(en, (seq_no + 1) * {L})"
+    return e.selectExpr(
         "shard",
-        F.col("seq_no").cast("long").alias("seq_no"),
+        "CAST(seq_no AS BIGINT) AS seq_no",
         "doc_id",
-        (seg_lo - F.col("st")).cast("long").alias("tok_offset"),
-        (seg_lo - F.col("seq_no") * L).cast("long").alias("seg_start"),
-        (seg_hi - seg_lo).cast("long").alias("seg_len"),
+        f"CAST({seg_lo} - st AS BIGINT) AS tok_offset",
+        f"CAST({seg_lo} - seq_no * {L} AS BIGINT) AS seg_start",
+        f"CAST({seg_hi} - {seg_lo} AS BIGINT) AS seg_len",
     )
 
 

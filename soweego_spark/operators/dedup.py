@@ -65,6 +65,32 @@ def md5_60(col):
     return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
 
 
+# SQL text helpers. The curate operators (shingles, MinHash, the LM
+# filter, gopher, packing) write their fixed expressions as SQL text over
+# column names: one py4j call to parse each, where every Column op costs
+# about five (CLAUDE.md). The plans are those of the Column builds.
+
+
+def md5_60_sql(expr: str) -> str:
+    """:func:`md5_60` of the SQL expression ``expr``, as SQL text (the
+    same plan)."""
+    return f"CAST(conv(substring(md5({expr}), 1, 15), 16, 10) AS BIGINT)"
+
+
+def sql_string(s: str) -> str:
+    """``s`` as a Spark SQL string literal (backslash escapes, the
+    default ``spark.sql.parser.escapedStringLiterals=false``)."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def words_sql(text_col: str, var: str) -> str:
+    """SQL text of the lowercase word list every dedup and curate
+    operator tokenizes into: ``text_col`` split on single spaces, empty
+    words dropped. ``var`` names the filter's lambda variable; it must be
+    unique within the projection (CLAUDE.md)."""
+    return f"filter(split(lower({text_col}), ' '), {var} -> {var} != '')"
+
+
 def explode_once(
     df: DataFrame,
     keep: list[str],
@@ -87,9 +113,9 @@ def explode_once(
     ``posexplode_outer`` with a null position is the one it adds for a
     null or empty array."""
     p = pos or "_pos"
-    out = df.select(*keep, F.posexplode_outer(arr).alias(p, alias)).where(
-        F.col(p).isNotNull()
-    )
+    out = df.selectExpr(
+        *keep, f"posexplode_outer({arr}) AS ({p}, {alias})"
+    ).where(f"{p} IS NOT NULL")
     return out if pos else out.drop(p)
 
 
@@ -146,19 +172,19 @@ def shingles(
     pushed-down inferred filter would inline ``w`` and split the text
     once per shingle.
     """
-    words = F.filter(
-        F.split(F.lower(F.col(text_col)), " "), lambda t: t != F.lit("")
+    docs = docs.selectExpr(
+        f"{id_col} AS doc_id", f"{words_sql(text_col, 'sh_t')} AS w"
     )
-    docs = docs.select(F.col(id_col).alias("doc_id"), words.alias("w"))
-    sh = F.transform(
-        F.sequence(F.lit(0), F.greatest(F.size("w") - n, F.lit(0))),
-        lambda i: F.concat_ws(" ", F.slice("w", i + 1, n)),
+    sh = (
+        f"transform(sequence(0, greatest(size(w) - {n}, 0)), "
+        f"sh_i -> concat_ws(' ', slice(w, sh_i + 1, {n})))"
     )
     # no words, no shingles: the clamped offsets [0] would give the token
     # "", so every empty doc the same signature (Jaccard-1 near-dups)
-    sh = F.when(F.size("w") > 0, sh).otherwise(F.array().cast("array<string>"))
-    return docs.select(
-        "doc_id", F.array_sort(F.array_distinct(sh)).alias("tokens")
+    return docs.selectExpr(
+        "doc_id",
+        f"array_sort(array_distinct(CASE WHEN size(w) > 0 THEN {sh} "
+        "ELSE CAST(array() AS ARRAY<STRING>) END)) AS tokens",
     )
 
 
@@ -208,30 +234,26 @@ def minhash_signatures(
         # Two md5s per token + num_perm cheap arithmetic projections
         # (Kirsch-Mitzenmacher, see PERM_MASK_60 note) — DuckDB-replicable
         # for the oracle gate and cheaper than num_perm independent hashes.
-        exploded = exploded.select(
+        h2 = md5_60_sql("concat('s:', token)")
+        exploded = exploded.selectExpr(
             "doc_id",
-            md5_60(F.col("token")).alias("h1"),
-            md5_60(F.concat(F.lit("s:"), F.col("token")))
-            .bitwiseAND(F.lit(PERM_MASK_55))
-            .alias("h2"),
+            f"{md5_60_sql('token')} AS h1",
+            f"{h2} & {PERM_MASK_55}L AS h2",
         )
         mins = [
-            F.min(
-                (F.col("h1") + F.lit(i) * F.col("h2")).bitwiseAND(
-                    F.lit(PERM_MASK_60)
-                )
-            ).alias(f"h{i}")
+            f"min((h1 + {i} * h2) & {PERM_MASK_60}L) AS h{i}"
             for i in range(num_perm)
         ]
     else:
         mins = [
-            F.min(
-                F.xxhash64(F.concat(F.lit(f"p{i}:"), F.col("token")))
-            ).alias(f"h{i}")
+            f"min(xxhash64(concat('p{i}:', token))) AS h{i}"
             for i in range(num_perm)
         ]
-    return exploded.groupBy("doc_id").agg(*mins).select(
-        "doc_id", F.array(*[f"h{i}" for i in range(num_perm)]).alias("sig")
+    hs = ", ".join(f"h{i}" for i in range(num_perm))
+    return (
+        exploded.groupBy("doc_id")
+        .agg(*[F.expr(m) for m in mins])
+        .selectExpr("doc_id", f"array({hs}) AS sig")
     )
 
 
@@ -253,25 +275,31 @@ def band_keys(
             f"num_perm must be divisible by bands, got {num_perm} and {bands}"
         )
     rows_per_band = num_perm // bands
-    band_structs = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band_id"),
-                F.concat_ws(
-                    ",",
-                    *[
-                        F.element_at("sig", b * rows_per_band + r + 1)
-                        .cast("string")
-                        for r in range(rows_per_band)
-                    ],
-                ).alias("band_hash"),
-            )
-            for b in range(bands)
-        ]
+    band_structs = ", ".join(
+        f"struct({b} AS band_id, concat_ws(',', "
+        + ", ".join(
+            f"CAST(element_at(sig, {b * rows_per_band + r + 1}) AS STRING)"
+            for r in range(rows_per_band)
+        )
+        + ") AS band_hash)"
+        for b in range(bands)
     )
-    return signed.select(
-        "doc_id", F.explode(band_structs).alias("band")
-    ).select("doc_id", "band.band_id", "band.band_hash")
+    return signed.selectExpr(
+        "doc_id", f"explode(array({band_structs})) AS band"
+    ).selectExpr("doc_id", "band.band_id", "band.band_hash")
+
+
+def _cap_buckets(banded: DataFrame, max_bucket_size: int) -> DataFrame:
+    """``banded`` without the rows of its buckets over
+    ``max_bucket_size`` docs (the boilerplate guard): a broadcast anti
+    join on the tiny over-cap list, never the under-cap bucket set."""
+    hot = (
+        banded.groupBy("band_id", "band_hash")
+        .agg(F.expr("count(*) AS bucket_n"))
+        .filter(f"bucket_n > {int(max_bucket_size)}")
+        .select("band_id", "band_hash")
+    )
+    return banded.join(F.broadcast(hot), ["band_id", "band_hash"], "left_anti")
 
 
 def minhash_lsh_candidates(
@@ -303,18 +331,9 @@ def minhash_lsh_candidates(
     signed = minhash_signatures(toks, num_perm=num_perm, hash_family=hash_family)
     banded = band_keys(signed, num_perm=num_perm, bands=bands)
 
-    # Skew guard: drop buckets larger than the cap before the self-join —
-    # broadcast anti join on the tiny over-cap list, never the full
-    # under-cap bucket set (the whole corpus's band table at web scale).
-    bucket_counts = banded.groupBy("band_id", "band_hash").agg(
-        F.count("*").alias("bucket_n")
-    )
-    hot = bucket_counts.filter(F.col("bucket_n") > max_bucket_size).select(
-        "band_id", "band_hash"
-    )
-    capped = banded.join(
-        F.broadcast(hot), ["band_id", "band_hash"], "left_anti"
-    )
+    # Skew guard: drop buckets larger than the cap before the self-join
+    # (the whole corpus's band table at web scale).
+    capped = _cap_buckets(banded, max_bucket_size)
 
     left = capped.select("band_id", "band_hash", F.col("doc_id").alias("doc_a"))
     right = capped.select(
@@ -756,15 +775,7 @@ def incremental_minhash_neardup(
                 num_perm=num_perm,
                 bands=bands,
             )
-        bucket_counts = corpus_banded.groupBy("band_id", "band_hash").agg(
-            F.count("*").alias("bucket_n")
-        )
-        hot = bucket_counts.filter(
-            F.col("bucket_n") > max_bucket_size
-        ).select("band_id", "band_hash")
-        corpus_capped = corpus_banded.join(
-            F.broadcast(hot), ["band_id", "band_hash"], "left_anti"
-        )
+        corpus_capped = _cap_buckets(corpus_banded, max_bucket_size)
 
     new_banded = band_keys(
         minhash_signatures(
@@ -777,49 +788,33 @@ def incremental_minhash_neardup(
         # exact mode consumes new_banded from two separate eager actions
         # (the corpus probe and the in-batch edge build)
         new_banded = pins.persist(new_banded)
+    def others(banded: DataFrame) -> DataFrame:
+        return banded.selectExpr("band_id", "band_hash", "doc_id AS other_id")
+
     if not corpus_empty:
         cand = (
-            new_banded.join(
-                corpus_capped.select(
-                    "band_id", "band_hash", F.col("doc_id").alias("other_id")
-                ),
-                ["band_id", "band_hash"],
-            )
+            new_banded.join(others(corpus_capped), ["band_id", "band_hash"])
             .select("doc_id", "other_id")
             .distinct()
         )
     batch_cand = None
     if mode is not None:
-        new_hot = (
-            new_banded.groupBy("band_id", "band_hash")
-            .agg(F.count("*").alias("bucket_n"))
-            .filter(F.col("bucket_n") > max_bucket_size)
-            .select("band_id", "band_hash")
-        )
-        new_capped = new_banded.join(
-            F.broadcast(new_hot), ["band_id", "band_hash"], "left_anti"
-        )
+        new_capped = _cap_buckets(new_banded, max_bucket_size)
         batch_cand = (
-            new_capped.join(
-                new_capped.select(
-                    "band_id", "band_hash",
-                    F.col("doc_id").alias("other_id"),
-                ),
-                ["band_id", "band_hash"],
-            )
-            .filter(F.col("doc_id") > F.col("other_id"))
+            new_capped.join(others(new_capped), ["band_id", "band_hash"])
+            .filter("doc_id > other_id")
             .select("doc_id", "other_id")
             .distinct()
         )
-    ta = new_toks.select("doc_id", F.col("tokens").alias("ta"))
-    inter = F.size(F.array_intersect("ta", "tb")).cast("double")
-    union = F.size(F.array_union("ta", "tb")).cast("double")
-    confirmed = F.round(inter / union, 6) >= jaccard_threshold
+    ta = new_toks.selectExpr("doc_id", "tokens AS ta")
+    confirmed = (
+        "round(CAST(size(array_intersect(ta, tb)) AS DOUBLE) "
+        "/ CAST(size(array_union(ta, tb)) AS DOUBLE), 6) "
+        f">= {float(jaccard_threshold)!r}D"
+    )
 
     def confirm(pairs: DataFrame, others: DataFrame) -> DataFrame:
-        tb = others.select(
-            F.col("doc_id").alias("other_id"), F.col("tokens").alias("tb")
-        )
+        tb = others.selectExpr("doc_id AS other_id", "tokens AS tb")
         return (
             pairs.join(ta, "doc_id").join(tb, "other_id").filter(confirmed)
         )
@@ -877,7 +872,7 @@ def incremental_minhash_neardup(
         # id-only join of two materialized checkpoints — cheap to
         # (re)compute, so the greedy pass needs no third checkpoint
         edges = edges_raw.join(corpus_dropped, "doc_id", "left_anti").join(
-            corpus_dropped.select(F.col("doc_id").alias("other_id")),
+            corpus_dropped.selectExpr("doc_id AS other_id"),
             "other_id",
             "left_anti",
         )
@@ -943,9 +938,7 @@ def _greedy_component_drops(
         # pass entirely (used by the cross-engine gate and available as
         # a pure-join mode for callers that want no applyInPandas at all)
         return _greedy_drops_joins(
-            edges.select(
-                F.col("doc_id").alias("a"), F.col("other_id").alias("b")
-            )
+            edges.selectExpr("doc_id AS a", "other_id AS b")
         )
 
     def per_comp(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -977,11 +970,7 @@ def _greedy_component_drops(
         return edges.select("doc_id")  # empty; reads the caller's pins
     if n_edges <= max_component_edges:
         return (
-            edges.select(
-                F.lit(0).alias("_g"),
-                F.col("doc_id").alias("a"),
-                F.col("other_id").alias("b"),
-            )
+            edges.selectExpr("0 AS _g", "doc_id AS a", "other_id AS b")
             .groupBy("_g")
             .applyInPandas(
                 per_comp,

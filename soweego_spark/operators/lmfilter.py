@@ -39,53 +39,58 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from soweego_spark.operators.dedup import explode_once, md5_60
+from soweego_spark.operators.dedup import (
+    explode_once,
+    md5_60_sql,
+    sql_string,
+    words_sql,
+)
 
 
 GROUP_SEP = "\x1f"  # namespaces the gram hash by group (per-language models)
 
 
-def _gram_hash_array(wcol, k: int, ns=None):
-    """array<long> of order-k gram hashes of a word-list column — total
-    for any input: the sequence end is greatest-clamped AND the whole
-    transform is guarded by a size test (short docs yield the empty
-    array, never a partial gram). The lambda reads ``wcol``, so explode
-    the result with :func:`dedup.explode_once` (CLAUDE.md round-6 note):
-    an inferred filter pushed below the projection would re-split the
-    text once per gram. ``ns`` (optional column) prefixes every hash
-    input with ``<ns>\\x1f`` — the per-group namespacing trick: one hash
-    space holds one independent model PER GROUP with no composite join
-    keys."""
-    empty = F.slice(F.array(F.lit(0).cast("long")), 1, 0)
+def _gram_hash_sql(k: int, i: str, ns: str | None) -> str:
+    """SQL text of the 60-bit hash of the order-``k`` gram of the word
+    list ``w`` at offset ``i``, namespaced by ``ns`` when given."""
+    g = f"concat_ws(' ', slice(w, {i} + 1, {k}))"
+    if ns is not None:
+        g = f"concat_ws({sql_string(GROUP_SEP)}, {ns}, {g})"
+    return md5_60_sql(g)
 
-    # single-parameter callable ONLY: F.transform treats a two-parameter
-    # callable as (element, index) — a `def h(i, k=k)` habit here fed the
-    # ARRAY INDEX into k and silently hashed wrong-length slices
-    def h(i):
-        g = F.concat_ws(" ", F.slice(wcol, i + 1, k))
-        if ns is not None:
-            g = F.concat_ws(GROUP_SEP, ns, g)
-        return md5_60(g)
 
-    grams = F.transform(
-        F.sequence(F.lit(0), F.greatest(F.size(wcol) - k, F.lit(0))), h
+def _gram_hash_array(k: int, ns: str | None = None) -> str:
+    """SQL text: array<long> of order-k gram hashes of the word list
+    ``w`` — total for any input: the sequence end is greatest-clamped AND
+    the whole transform is guarded by a size test (short docs yield the
+    empty array, never a partial gram). The lambda reads ``w``, so
+    explode the result with :func:`dedup.explode_once` (CLAUDE.md
+    round-6 note): an inferred filter pushed below the projection would
+    re-split the text once per gram. ``ns`` (optional column) prefixes
+    every hash input with ``<ns>\\x1f`` — the per-group namespacing
+    trick: one hash space holds one independent model PER GROUP with no
+    composite join keys. The lambda variable is named after the order,
+    so arrays of two orders never share one."""
+    i = f"lm{k}_i"
+    grams = (
+        f"transform(sequence(0, greatest(size(w) - {k}, 0)), "
+        f"{i} -> {_gram_hash_sql(k, i, ns)})"
     )
-    return F.when(F.size(wcol) >= k, grams).otherwise(empty)
+    return (
+        f"CASE WHEN size(w) >= {k} THEN {grams} "
+        "ELSE slice(array(CAST(0 AS BIGINT)), 1, 0) END"
+    )
 
 
 def _wframe(docs: DataFrame, id_col: str, text_col: str, group_col):
     """(doc_id, [g,] w): word-list frame, with the coalesced group column
     when per-group models are requested (NULL group -> '' in BOTH engines
     so the oracle's ``coalesce(lang, '')`` namespacing replays)."""
-    cols = [F.col(id_col).alias("doc_id")]
+    cols = [f"{id_col} AS doc_id"]
     if group_col is not None:
-        cols.append(F.coalesce(F.col(group_col).cast("string"), F.lit("")).alias("g"))
-    cols.append(
-        F.filter(
-            F.split(F.lower(F.col(text_col)), " "), lambda t: t != F.lit("")
-        ).alias("w")
-    )
-    return docs.select(*cols)
+        cols.append(f"coalesce(CAST({group_col} AS STRING), '') AS g")
+    cols.append(f"{words_sql(text_col, 'lm_t')} AS w")
+    return docs.selectExpr(*cols)
 
 
 def lm_counts(
@@ -108,52 +113,36 @@ def lm_counts(
     if n < 2:
         raise ValueError("lm_counts needs n >= 2 (prefix order n-1 >= 1)")
     w = _wframe(ref_docs, id_col, text_col, group_col)
-    ns = F.col("g") if group_col is not None else None
+    ns = "g" if group_col is not None else None
     keep = ["g", "w"] if group_col is not None else ["w"]
     # ONE higher-order function per projection: two sibling transforms in
     # a single select mis-bind their same-named lambda variables
     # (CLAUDE.md round-3 trap — observed here as the order-n array
     # hashing the other transform's slice)
-    a = w.select(*keep, _gram_hash_array(F.col("w"), n, ns).alias("h1"))
-    b = a.select(
-        F.concat(F.col("h1"), _gram_hash_array(F.col("w"), n - 1, ns)).alias(
-            "ghs"
-        )
-    )
+    a = w.selectExpr(*keep, f"{_gram_hash_array(n, ns)} AS h1")
+    b = a.selectExpr(f"concat(h1, {_gram_hash_array(n - 1, ns)}) AS ghs")
     gh = explode_once(b, [], "ghs", "gh")
-    return gh.groupBy("gh").agg(F.count("*").alias("c"))
+    return gh.groupBy("gh").agg(F.expr("count(*) AS c"))
 
 
-def _gram_prefix_array(n: int, ns=None):
-    """array<struct<gh, ph>> over the word list ``w``: every order-n gram
-    hash with its order-(n-1) prefix hash, in position order. Docs
-    shorter than n get the EMPTY array, never a partial gram (size guard
-    in the projection, not a ``where``: a filter on ``w`` is pushed below
-    the word-list projection and splits the text a second time); the
-    sequence end stays greatest-clamped so the transform is total even
-    on its own."""
-
-    def h(i, k):
-        g = F.concat_ws(" ", F.slice("w", i + 1, k))
-        if ns is not None:
-            g = F.concat_ws(GROUP_SEP, ns, g)
-        return md5_60(g)
-
-    structs = F.transform(
-        F.sequence(F.lit(0), F.greatest(F.size("w") - n, F.lit(0))),
-        lambda i: F.struct(h(i, n).alias("gh"), h(i, n - 1).alias("ph")),
+def _gram_prefix_array(n: int, ns: str | None = None) -> str:
+    """SQL text: array<struct<gh, ph>> over the word list ``w``: every
+    order-n gram hash with its order-(n-1) prefix hash, in position
+    order. Docs shorter than n get the EMPTY array, never a partial gram
+    (size guard in the projection, not a ``where``: a filter on ``w`` is
+    pushed below the word-list projection and splits the text a second
+    time); the sequence end stays greatest-clamped so the transform is
+    total even on its own."""
+    structs = (
+        f"transform(sequence(0, greatest(size(w) - {n}, 0)), "
+        f"gp_i -> struct({_gram_hash_sql(n, 'gp_i', ns)} AS gh, "
+        f"{_gram_hash_sql(n - 1, 'gp_i', ns)} AS ph))"
     )
-    empty = F.slice(
-        F.array(
-            F.struct(
-                F.lit(0).cast("long").alias("gh"),
-                F.lit(0).cast("long").alias("ph"),
-            )
-        ),
-        1,
-        0,
+    empty = (
+        "slice(array(struct(CAST(0 AS BIGINT) AS gh, "
+        "CAST(0 AS BIGINT) AS ph)), 1, 0)"
     )
-    return F.when(F.size("w") >= n, structs).otherwise(empty)
+    return f"CASE WHEN size(w) >= {n} THEN {structs} ELSE {empty} END"
 
 
 def gram_prefix_occurrences(
@@ -172,10 +161,19 @@ def gram_prefix_occurrences(
     carry the doc's own group namespace, so each doc scores against ITS
     group's model."""
     w = _wframe(docs, id_col, text_col, group_col)
-    ns = F.col("g") if group_col is not None else None
-    gps = w.select("doc_id", _gram_prefix_array(n, ns).alias("gps"))
-    return explode_once(gps, ["doc_id"], "gps", "gp", pos="pos").select(
-        "doc_id", "pos", F.col("gp.gh").alias("gh"), F.col("gp.ph").alias("ph")
+    ns = "g" if group_col is not None else None
+    gps = w.selectExpr("doc_id", f"{_gram_prefix_array(n, ns)} AS gps")
+    return explode_once(gps, ["doc_id"], "gps", "gp", pos="pos").selectExpr(
+        "doc_id", "pos", "gp.gh AS gh", "gp.ph AS ph"
+    )
+
+
+def _model_sides(model: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """The model as the gram side (gh, c_gram) and the prefix side
+    (ph, c_prefix) of the two scoring joins."""
+    return (
+        model.selectExpr("gh", "c AS c_gram"),
+        model.selectExpr("gh AS ph", "c AS c_prefix"),
     )
 
 
@@ -205,49 +203,33 @@ def lm_doc_stats(
     # count only non-null gram positions, so the sufficient statistics
     # are identical row for row.
     w = _wframe(docs, id_col, text_col, group_col)
-    ns = F.col("g") if group_col is not None else None
+    ns = "g" if group_col is not None else None
     # docs shorter than n carry an EMPTY array, so explode_outer emits
     # their null-gram row (an outer generator gets no inferred filter)
     occ = (
-        w.select(
+        w.selectExpr(
             "doc_id",
-            F.size("w").cast("long").alias("n_tokens"),
-            _gram_prefix_array(n, ns).alias("gps"),
+            "CAST(size(w) AS BIGINT) AS n_tokens",
+            f"{_gram_prefix_array(n, ns)} AS gps",
         )
-        .select("doc_id", "n_tokens", F.explode_outer("gps").alias("gp"))
-        .select(
-            "doc_id",
-            "n_tokens",
-            F.col("gp.gh").alias("gh"),
-            F.col("gp.ph").alias("ph"),
-        )
+        .selectExpr("doc_id", "n_tokens", "explode_outer(gps) AS gp")
+        .selectExpr("doc_id", "n_tokens", "gp.gh AS gh", "gp.ph AS ph")
     )
-    mg = model.select("gh", F.col("c").alias("c_gram"))
-    mp = model.select(F.col("gh").alias("ph"), F.col("c").alias("c_prefix"))
+    mg, mp = _model_sides(model)
     j = occ.join(mg, "gh", "left").join(mp, "ph", "left")
-    cap = F.lit(int(count_cap)).cast("long")
-    return j.groupBy("doc_id").agg(
-        F.max("n_tokens").alias("n_tokens"),
-        F.count("gh").cast("long").alias("n_grams"),
-        F.sum(
-            F.when(F.col("gh").isNotNull() & F.col("c_gram").isNull(), 1)
-            .otherwise(0)
-        )
-        .cast("long")
-        .alias("n_oov"),
-        F.sum(
-            F.when(F.col("ph").isNotNull() & F.col("c_prefix").isNull(), 1)
-            .otherwise(0)
-        )
-        .cast("long")
-        .alias("n_ctx_oov"),
-        F.sum(F.least(F.coalesce(F.col("c_gram"), F.lit(0)), cap))
-        .cast("long")
-        .alias("sum_c_gram"),
-        F.sum(F.least(F.coalesce(F.col("c_prefix"), F.lit(0)), cap))
-        .cast("long")
-        .alias("sum_c_prefix"),
-    )
+    cap = f"CAST({int(count_cap)} AS BIGINT)"
+    return j.groupBy("doc_id").agg(*[F.expr(e) for e in (
+        "max(n_tokens) AS n_tokens",
+        "CAST(count(gh) AS BIGINT) AS n_grams",
+        "CAST(sum(CASE WHEN gh IS NOT NULL AND c_gram IS NULL THEN 1 "
+        "ELSE 0 END) AS BIGINT) AS n_oov",
+        "CAST(sum(CASE WHEN ph IS NOT NULL AND c_prefix IS NULL THEN 1 "
+        "ELSE 0 END) AS BIGINT) AS n_ctx_oov",
+        f"CAST(sum(least(coalesce(c_gram, 0), {cap})) AS BIGINT) "
+        "AS sum_c_gram",
+        f"CAST(sum(least(coalesce(c_prefix, 0), {cap})) AS BIGINT) "
+        "AS sum_c_prefix",
+    )])
 
 
 def lm_filter(
@@ -271,14 +253,11 @@ def lm_filter(
     plus a ``keep`` boolean; callers drop with ``.where("keep")``."""
     stats = lm_doc_stats(docs, model, n, count_cap, id_col, text_col, group_col)
     keep = (
-        (F.col("n_grams") >= 1)
-        & (F.col("n_oov") * 100 <= F.col("n_grams") * int(max_oov_pct))
-        & (
-            F.col("sum_c_gram") * int(min_avg_count_den)
-            >= F.col("n_grams") * int(min_avg_count_num)
-        )
+        f"((n_grams >= 1) AND (n_oov * 100 <= n_grams * {int(max_oov_pct)})) "
+        f"AND (sum_c_gram * {int(min_avg_count_den)} "
+        f">= n_grams * {int(min_avg_count_num)})"
     )
-    return stats.withColumn("keep", keep)
+    return stats.withColumn("keep", F.expr(keep))
 
 
 def lm_log_prob(
@@ -298,8 +277,7 @@ def lm_log_prob(
     count (the caller computed it when training). Pure column expressions
     over the same two hash joins as the stats — JVM-side end to end."""
     occ = gram_prefix_occurrences(docs, n, id_col, text_col, group_col)
-    mg = model.select("gh", F.col("c").alias("c_gram"))
-    mp = model.select(F.col("gh").alias("ph"), F.col("c").alias("c_prefix"))
+    mg, mp = _model_sides(model)
     j = occ.join(mg, "gh", "left").join(mp, "ph", "left")
     lp = F.log(
         (F.coalesce(F.col("c_gram"), F.lit(0)) + F.lit(1)).cast("double")

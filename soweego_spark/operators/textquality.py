@@ -25,12 +25,6 @@ PHONE_RE = r"\+?[0-9][0-9() .-]{6,}[0-9]"
 IPV4_RE = r"\b([0-9]{1,3}\.){3}[0-9]{1,3}\b"
 
 
-def _tokens(text_col):
-    return F.filter(
-        F.split(F.lower(text_col), r"\s+"), lambda w: w != ""
-    )
-
-
 def gopher_quality(
     docs: DataFrame,
     id_col: str = "doc_id",
@@ -47,9 +41,14 @@ def gopher_quality(
     row (sort the bigram array, fold for the longest equal run), so the
     whole pass is a narrow projection with no exchange — never a
     per-document Python loop or a collected vocabulary.
+
+    The expressions are SQL text, one py4j call to parse each (CLAUDE.md);
+    every lambda variable has a name of its own, as sibling higher-order
+    functions share one projection.
     """
-    toks = docs.select(
-        F.col(id_col).alias("id"), _tokens(F.col(text_col)).alias("w")
+    toks = docs.selectExpr(
+        f"{id_col} AS id",
+        rf"filter(split(lower({text_col}), '\\s+'), gq_w -> gq_w != '') AS w",
     )
     # Per-doc bigram MODE computed inside the row (r7): sort the bigram
     # array and fold for the longest equal run — the same integer the old
@@ -60,64 +59,50 @@ def gopher_quality(
     # bounded by the same array the row already holds. Bigrams are
     # "word word", never empty, so the "" init sentinel cannot match the
     # first element.
-    bigrams = F.zip_with(
-        F.slice("w", 1, F.greatest(F.size("w") - 1, F.lit(0))),
-        F.slice("w", 2, F.greatest(F.size("w") - 1, F.lit(0))),
-        lambda a, b: F.concat(a, F.lit(" "), b),
+    tail = "greatest(size(w) - 1, 0)"
+    bigrams = (
+        f"zip_with(slice(w, 1, {tail}), slice(w, 2, {tail}), "
+        "(bg_a, bg_b) -> concat(bg_a, ' ', bg_b))"
     )
-    mode_fold = F.aggregate(
-        F.array_sort(bigrams),
-        F.struct(
-            F.lit("").alias("prev"),
-            F.lit(0).cast("long").alias("run"),
-            F.lit(0).cast("long").alias("best"),
-        ),
-        lambda acc, g: F.struct(
-            g.alias("prev"),
-            F.when(g == acc["prev"], acc["run"] + 1)
-            .otherwise(F.lit(1).cast("long"))
-            .alias("run"),
-            F.greatest(
-                acc["best"],
-                F.when(g == acc["prev"], acc["run"] + 1).otherwise(
-                    F.lit(1).cast("long")
-                ),
-            ).alias("best"),
-        ),
-        lambda acc: acc["best"],
+    run = (
+        "CASE WHEN bg_g = bg_acc.prev THEN bg_acc.run + 1 "
+        "ELSE CAST(1 AS BIGINT) END"
     )
-    base = toks.select(
+    mode_fold = (
+        f"aggregate(array_sort({bigrams}), struct('' AS prev, "
+        "CAST(0 AS BIGINT) AS run, CAST(0 AS BIGINT) AS best), "
+        f"(bg_acc, bg_g) -> struct(bg_g AS prev, {run} AS run, "
+        f"greatest(bg_acc.best, {run}) AS best), bg_res -> bg_res.best)"
+    )
+    base = toks.selectExpr(
         "id",
-        F.size("w").alias("word_count"),
-        F.size(F.array_distinct("w")).alias("distinct_words"),
-        F.aggregate(
-            "w", F.lit(0).cast("long"), lambda acc, x: acc + F.length(x)
-        ).alias("char_sum"),
-        mode_fold.alias("top_bigram_count"),
+        "size(w) AS word_count",
+        "size(array_distinct(w)) AS distinct_words",
+        "aggregate(w, CAST(0 AS BIGINT), "
+        "(cs_acc, cs_w) -> cs_acc + length(cs_w)) AS char_sum",
+        f"{mode_fold} AS top_bigram_count",
     )
     # word_count == 0 (empty/whitespace docs — exactly what the filter
     # exists to reject) must yield a failing verdict, not a
     # DIVIDE_BY_ZERO throw under Spark 4 ANSI mode
-    nz = F.greatest(F.col("word_count"), F.lit(1))
-    j = base.select(
+    nz = "greatest(word_count, 1)"
+    j = base.selectExpr(
         "id",
-        F.col("word_count").cast("long").alias("word_count"),
-        (F.col("char_sum") / nz).alias("mean_word_len"),
-        (F.col("distinct_words").cast("double") / nz).alias(
-            "distinct_ratio"
-        ),
-        (
-            F.coalesce(F.col("top_bigram_count"), F.lit(0)).cast("double")
-            / F.greatest(F.col("word_count") - 1, F.lit(1))
-        ).alias("top_bigram_frac"),
+        "CAST(word_count AS BIGINT) AS word_count",
+        f"char_sum / {nz} AS mean_word_len",
+        f"CAST(distinct_words AS DOUBLE) / {nz} AS distinct_ratio",
+        "CAST(coalesce(top_bigram_count, 0) AS DOUBLE) "
+        "/ greatest(word_count - 1, 1) AS top_bigram_frac",
     )
+    # left-deep, as Column ``&`` chains it (the SQL parser would balance
+    # an unparenthesized chain)
     verdict = (
-        (F.col("word_count") >= min_words)
-        & (F.col("mean_word_len") <= max_mean_word_len)
-        & (F.col("distinct_ratio") >= min_distinct_ratio)
-        & (F.col("top_bigram_frac") <= max_top_bigram_frac)
+        f"(((word_count >= {int(min_words)}) "
+        f"AND (mean_word_len <= {float(max_mean_word_len)!r}D)) "
+        f"AND (distinct_ratio >= {float(min_distinct_ratio)!r}D)) "
+        f"AND (top_bigram_frac <= {float(max_top_bigram_frac)!r}D)"
     )
-    return j.withColumn("quality_pass", verdict)
+    return j.withColumn("quality_pass", F.expr(verdict))
 
 
 def scrub_pii(

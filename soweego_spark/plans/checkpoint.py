@@ -3,9 +3,14 @@
 The reference memoizes every expensive stage as a pickle file and
 early-returns when it exists (blocking.py:86-94, workflow.py:359-362). The
 Spark-native equivalent: each stage writes parquet + a JSON manifest
-carrying the stage's config hash, row count, and per-partition lineage
-counters. Re-running with the same config hash skips the compute and reads
-the parquet back; a changed config invalidates the checkpoint. On a real
+carrying the stage's config hash, schema DDL, row count, and lineage
+counters: ``partitions`` maps each output file's part number (the write
+task) to its rows. Both counts come from the footers of the files just
+written, and the data is read back, on save and on resume, with the
+recorded schema, so a stage pays for its write and nothing else: no
+schema-inference job, no counting job. Re-running with the same config
+hash skips the compute and reads the parquet back; a changed config, or
+a manifest without a schema, invalidates the checkpoint. On a real
 lake, the parquet directory is an Iceberg table and the manifest collapses
 into its snapshot metadata — the manifest file keeps the sandbox free of
 external jars while preserving the semantics.
@@ -18,12 +23,23 @@ import json
 import re
 from pathlib import Path
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from soweego_spark.operators import pins
 
 MANIFEST_NAME = "_stage_manifest.json"
+
+
+def _footer_rows(data_dir: Path) -> dict[str, int]:
+    """Rows per output file part, read from the parquet footers under
+    ``data_dir`` (a part's files are summed: a bucketed write leaves one
+    file per bucket the task wrote)."""
+    rows: dict[str, int] = {}
+    for f in sorted(data_dir.glob("part-*")):
+        part = str(int(re.match(r"part-(\d+)", f.name).group(1)))
+        rows[part] = rows.get(part, 0) + pq.read_metadata(f).num_rows
+    return rows
 
 
 def config_hash(config: dict) -> str:
@@ -156,17 +172,24 @@ class StageCheckpointer:
         if not mf.exists():
             return None
         manifest = json.loads(mf.read_text())
-        if manifest.get("config_hash") != cfg_hash:
+        if (
+            manifest.get("config_hash") != cfg_hash
+            or "schema_ddl" not in manifest
+        ):
             return None
         if manifest.get("bucket_spec"):
             return self._register_bucketed(stage, manifest, d / "data")
-        return self.spark.read.parquet(str(d / "data"))
+        return self._read(manifest["schema_ddl"], d / "data")
+
+    def _read(self, schema_ddl: str, data_dir: Path) -> DataFrame:
+        # an explicit schema: spark.read.parquet would otherwise run a
+        # job to infer it from the footers
+        return self.spark.read.schema(schema_ddl).parquet(str(data_dir))
 
     def save(self, stage: str, df: DataFrame, cfg_hash: str) -> DataFrame:
         d, mf = self._paths(stage)
         data_dir = d / "data"
         spec = self.bucket_specs.get(stage)
-        schema_ddl = None
         if spec and self.table_format == "iceberg":
             # The write side only exists for Spark-native bucketed parquet.
             # Writing parquet here and registering USING iceberg on resume
@@ -200,20 +223,18 @@ class StageCheckpointer:
             persisted = self.spark.table(tbl)
             schema_ddl = persisted._jdf.schema().toDDL()
         else:
+            schema_ddl = df._jdf.schema().toDDL()
             df.write.mode("overwrite").parquet(str(data_dir))
-            persisted = self.spark.read.parquet(str(data_dir))
+            persisted = self._read(schema_ddl, data_dir)
         # Per-partition lineage counters (north rule): rows per output file
-        # partition, recorded in the manifest.
-        per_part = (
-            persisted.groupBy(F.spark_partition_id().alias("partition"))
-            .count()
-            .collect()
-        )
+        # part, from the footers the write just produced.
+        per_part = _footer_rows(data_dir)
         manifest = {
             "stage": stage,
             "config_hash": cfg_hash,
-            "row_count": int(sum(r["count"] for r in per_part)),
-            "partitions": {str(r["partition"]): int(r["count"]) for r in per_part},
+            "row_count": sum(per_part.values()),
+            "partitions": per_part,
+            "schema_ddl": schema_ddl,
         }
         if spec:
             manifest["bucket_spec"] = {
@@ -221,7 +242,6 @@ class StageCheckpointer:
                 "sort_cols": list(spec.get("sort_cols") or []),
                 "n_buckets": int(spec.get("n_buckets", 32)),
             }
-            manifest["schema_ddl"] = schema_ddl
         # temp file + atomic rename: a torn write never leaves a half
         # manifest where load() would read it
         tmp = mf.with_name(mf.name + ".tmp")

@@ -49,7 +49,7 @@ from __future__ import annotations
 import time
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from soweego_spark.operators import pins
@@ -95,14 +95,11 @@ def _lm_keep(docs: DataFrame, cfg: CurateConfig) -> DataFrame:
     deterministic md5 slot-0 slice (lmref salt, matching the lm_filter
     gate's split rule); EVERY doc — reference slice included — is scored
     against it and kept iff the integer-exact decision passes."""
-    from soweego_spark.operators.dedup import md5_60
+    from soweego_spark.operators.dedup import md5_60_sql
     from soweego_spark.operators.lmfilter import lm_counts, lm_filter
 
-    slot = F.pmod(
-        md5_60(F.concat(F.lit("lmref:"), F.col("doc_id").cast("string"))),
-        F.lit(cfg.lm_slots),
-    )
-    ref = docs.where(slot == 0)
+    slot = md5_60_sql("concat('lmref:', CAST(doc_id AS STRING))")
+    ref = docs.where(f"pmod({slot}, {int(cfg.lm_slots)}) = 0")
     model = lm_counts(ref, n=cfg.lm_n)
     decided = lm_filter(
         docs,
@@ -147,10 +144,8 @@ def run_curate(
         chain = config_hash(stage_cfg)
         out = ckpt.stage(name, stage_cfg, compute)
         n_stages += 1
-        # the manifest already carries the persisted row count — reading
-        # it back avoids one count job per stage (3 -> 2 actions/stage)
-        mf = ckpt.manifest(name)
-        rows = mf["row_count"] if mf else out.count()
+        # the manifest carries the row count, read from the footers
+        rows = ckpt.manifest(name)["row_count"]
         result["stages"].append({"stage": name, "rows": rows})
         return out
 
@@ -166,8 +161,8 @@ def run_curate(
             # consumer re-ran the whole gopher bigram shuffle from
             # scratch — the dominant cost of the quality stage at sf0.1
             # (r7 stage diagnostic; released with the stage's pin scope)
-            passed = gopher_quality(docs).where("quality_pass").select(
-                F.col("id").alias("doc_id")
+            passed = gopher_quality(docs).where("quality_pass").selectExpr(
+                "id AS doc_id"
             )
             if cfg.lm:
                 passed = pins.checkpoint(passed)
@@ -184,16 +179,14 @@ def run_curate(
     def compute_exact(src=kept) -> DataFrame:
         # keep-min per ~192-bit content key: only (doc_id, 30 B key)
         # shuffles, never the documents (dedup.content_keys rationale)
-        key = F.struct(
-            F.xxhash64("text").alias("h"),
-            F.md5(F.col("text").cast("binary")).alias("m"),
-            F.length("text").alias("n"),
+        key = (
+            "struct(xxhash64(text) AS h, md5(CAST(text AS BINARY)) AS m, "
+            "length(text) AS n)"
         )
-        rep = F.min("doc_id").over(Window.partitionBy("_ck"))
         winners = (
-            src.select("doc_id", key.alias("_ck"))
-            .withColumn("_rep", rep)
-            .where(F.col("doc_id") == F.col("_rep"))
+            src.selectExpr("doc_id", f"{key} AS _ck")
+            .withColumn("_rep", F.expr("min(doc_id) OVER (PARTITION BY _ck)"))
+            .where("doc_id = _rep")
             .select("doc_id")
         )
         return src.join(winners, "doc_id", "left_semi")
@@ -258,8 +251,8 @@ def run_curate(
             )
         from soweego_spark.operators.corpus import _words
 
-        return _words(src, "doc_id", "text").select(
-            "doc_id", F.size("w").cast("long").alias("n")
+        return _words(src, "doc_id", "text").selectExpr(
+            "doc_id", "CAST(size(w) AS BIGINT) AS n"
         )
 
     counts = stage("counts", compute_counts)

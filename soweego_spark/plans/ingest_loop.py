@@ -213,11 +213,9 @@ def run_ingest_loop(
             )
 
         n_in = thunk().count()
-        # the kept stage's manifest already carries the persisted row
-        # count — no second scan of the kept parquet (r7; one count job
-        # per batch saved)
-        mf = ckpt.manifest(f"kept_b{i}")
-        n_kept = mf["row_count"] if mf else kept_docs.count()
+        # the kept stage's manifest carries the row count, read from the
+        # footers: no scan of the kept parquet
+        n_kept = ckpt.manifest(f"kept_b{i}")["row_count"]
         result.batches.append(
             {"batch": i, "id": batch_id, "docs_in": n_in,
              "docs_kept": n_kept,

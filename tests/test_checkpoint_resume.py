@@ -301,3 +301,91 @@ def test_bucketed_checkpoint_roundtrip_matches_plain(spark, root):
     b = buck.stage("s", {}, lambda: df)
     assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect()))
     assert plain.manifest("s")["row_count"] == buck.manifest("s")["row_count"]
+
+
+def _jobs_in_group(spark, group, fn):
+    sc = spark.sparkContext
+    sc.setJobGroup(group, "job-count probe")
+    try:
+        fn()
+    finally:
+        sc.setJobGroup(None, None)
+    return sorted(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.mark.parametrize("kind", ["plain", "empty", "bucketed"])
+def test_save_runs_only_the_write_and_counts_from_footers(spark, root, kind):
+    """``save`` of a materialized frame runs the write's own jobs and no
+    job after them (no counting collect, no schema-inference read), and
+    the manifest's row count and per-part counts, read from the parquet
+    footers, match the rows written."""
+    from soweego_spark.operators import pins
+    from soweego_spark.sources.readers import write_bucketed_table
+
+    spec = {"bucket_cols": ["k"], "sort_cols": ["k"], "n_buckets": 3}
+    n = 0 if kind == "empty" else 500
+    with pins.scope():
+        df = pins.persist(
+            spark.range(n, numPartitions=4).selectExpr(
+                "id", "CAST(id % 7 AS STRING) AS k", "array(id, id) AS a"
+            )
+        )
+        df.count()
+        if kind == "bucketed":
+            def bare():
+                write_bucketed_table(df, "soweego_bare_write", ["k"], 3,
+                                     ["k"], path=f"{root}/bare")
+        else:
+            def bare():
+                df.write.mode("overwrite").parquet(f"{root}/bare")
+        write_jobs = _jobs_in_group(spark, f"bare-{kind}", bare)
+        ck = StageCheckpointer(
+            root, spark,
+            bucket_specs={"s": spec} if kind == "bucketed" else None,
+        )
+        save_jobs = _jobs_in_group(
+            spark, f"save-{kind}", lambda: ck.save("s", df, "h")
+        )
+    spark.sql("DROP TABLE IF EXISTS soweego_bare_write")
+    assert len(save_jobs) == len(write_jobs) >= 1, (save_jobs, write_jobs)
+    rows = spark.read.parquet(f"{root}/s/data").count()
+    mf = ck.manifest("s")
+    assert rows == n
+    assert mf["row_count"] == rows
+    assert sum(mf["partitions"].values()) == rows
+
+
+def test_resume_reads_with_the_recorded_schema(spark, root):
+    """A loaded stage has the schema Spark infers from its files, read
+    with the manifest's DDL instead (no inference job); a manifest
+    without a schema is a miss and the stage is recomputed."""
+    import json
+    from pathlib import Path
+
+    # ``id`` is NOT NULL in the frame; parquet reads it back nullable
+    df = spark.range(1).selectExpr(
+        "id", "'a' AS s", "array(1.5D) AS d", "map('k', 2) AS m",
+        "named_struct('i', 3, 't', 'x') AS st",
+    )
+    assert not df.schema["id"].nullable
+    ck = StageCheckpointer(root, spark)
+    ck.stage("s", {"v": 1}, lambda: df)
+    loaded = ck.load("s", config_hash({"v": 1}))
+    inferred = spark.read.parquet(f"{root}/s/data")
+    assert loaded.schema == inferred.schema
+    assert loaded.collect() == inferred.collect()
+
+    mf = Path(root) / "s" / "_stage_manifest.json"
+    manifest = json.loads(mf.read_text())
+    del manifest["schema_ddl"]
+    mf.write_text(json.dumps(manifest))
+    assert ck.load("s", config_hash({"v": 1})) is None
+    calls = {"n": 0}
+
+    def compute():
+        calls["n"] += 1
+        return df
+
+    ck.stage("s", {"v": 1}, compute)
+    assert calls["n"] == 1
+    assert ck.manifest("s")["schema_ddl"]

@@ -556,34 +556,65 @@ def test_exact_mode_bounds_pinned_checkpoints(spark):
         assert pinned_ids() - before == set(), cap
 
 
-def test_greedy_joins_one_action_per_round(spark):
+def _count_actions(monkeypatch, cls, fn):
+    """``fn()`` and the number of driver actions it issued on ``cls``
+    frames: a job-running DataFrame method or an eager localCheckpoint,
+    counted once however many of them it calls internally (``first``
+    goes through ``head``, ``take`` and ``collect``)."""
+    state = {"n": 0, "depth": 0}
+
+    def spy(real, is_action):
+        def counted(self, *a, **k):
+            if state["depth"] == 0 and is_action(a, k):
+                state["n"] += 1
+            state["depth"] += 1
+            try:
+                return real(self, *a, **k)
+            finally:
+                state["depth"] -= 1
+
+        return counted
+
+    with monkeypatch.context() as m:
+        for name in ("count", "collect", "take", "head", "first", "isEmpty",
+                     "toPandas", "toLocalIterator"):
+            m.setattr(cls, name,
+                      spy(getattr(cls, name), lambda a, k: True))
+        m.setattr(cls, "localCheckpoint", spy(
+            cls.localCheckpoint,
+            lambda a, k: k.get("eager", a[0] if a else True),
+        ))
+        out = fn()
+    return out, state["n"]
+
+
+def test_greedy_joins_one_action_per_round(spark, monkeypatch):
     """Driver-round floor regression (round-6): the joins greedy must
     issue ONE Spark action per round — the lazy-checkpoint-materializing
-    count that also decides termination. AQE splits that action into one
-    job per Exchange, so the stable observable is the MARGINAL jobs per
-    extra round between two chains of known round counts: ~10 with the
-    single-action round (no per-round distinct), >=12 with the round-5
-    two-action shape."""
-    from soweego_spark.operators.dedup import _greedy_component_drops
+    count that also decides termination. The driver actions are counted,
+    not the jobs (AQE splits an action into one job per Exchange, a
+    number that varies with timing): between two chains of known round
+    counts the marginal is exactly one action per round (the round-5
+    shape paid two, an eager checkpoint and an isEmpty probe)."""
+    from soweego_spark.operators import dedup
 
-    sc = spark.sparkContext
-    jobs = {}
+    actions = {}
     # ascending chain of n vertices = ceil((n-1)/2) greedy rounds
     for n, rounds in ((6, 3), (21, 10)):
         edges = spark.createDataFrame(
             [(i + 1, i) for i in range(n - 1)], "doc_id long, other_id long"
         )
-        group = f"greedy-jobs-{n}"
-        sc.setJobGroup(group, "job-count probe")
-        try:
-            drops = _greedy_component_drops(edges, max_component_edges=0)
-            got = sorted(r["doc_id"] for r in drops.collect())
-        finally:
-            sc.setJobGroup(None, None)
-        assert got == list(range(1, n, 2))
-        jobs[rounds] = len(sc.statusTracker().getJobIdsForGroup(group))
-    marginal = (jobs[10] - jobs[3]) / 7.0
-    assert marginal <= 11.0, jobs
+        drops, actions[rounds] = _count_actions(
+            monkeypatch, type(edges),
+            lambda e=edges: dedup._greedy_component_drops(
+                e, max_component_edges=0
+            ),
+        )
+        assert dedup.LAST_JOINS_ROUNDS == rounds
+        assert sorted(r["doc_id"] for r in drops.collect()) == list(
+            range(1, n, 2)
+        )
+    assert actions[10] - actions[3] == 7, actions
 
 
 def test_greedy_drops_joins_equivalence(spark):
